@@ -260,9 +260,9 @@ def run_scaling_job(
     cores: int, n_vertices: int, n_edges: int, iters: int
 ) -> dict:
     """The scaling-protocol job: PageRank (fixed supersteps) on a pure-SQL
-    power-law edge table big enough to be compute-dominated, forced onto the
-    shuffle-join path (broadcast_state_threshold=0) — the 100TB execution
-    shape, where added cores do added work."""
+    power-law edge table big enough to be compute-dominated, on pagerank's
+    shuffle-join path — the 100TB execution shape, where added cores do
+    added work."""
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
@@ -291,9 +291,9 @@ def run_scaling_job(
     m = edges.count()
     verts = spark.range(n_vertices).select(F.col("id").alias("vertex_id"))
     # warm-up (JIT/AQE plan-shape compilation)
-    pagerank(edges, verts, fixed_iters=2, broadcast_state_threshold=0).ranks.count()
+    pagerank(edges, verts, fixed_iters=2).ranks.count()
     t0 = time.monotonic()
-    res = pagerank(edges, verts, fixed_iters=iters, broadcast_state_threshold=0)
+    res = pagerank(edges, verts, fixed_iters=iters)
     res.ranks.count()
     wall = time.monotonic() - t0
     spark.stop()

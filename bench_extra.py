@@ -51,7 +51,7 @@ def main() -> None:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[1])
     except (IndexError, ValueError):
         sf = 0.1
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     n_convs = args.n_convs or max(int(CONVS_PER_SF * sf), 200)
 
     spark = get_spark(app_name="hgs-bench-extra", cores=cpus,

@@ -39,9 +39,10 @@ exactly by construction instead of relying on last-ulp luck; (2) int32
 halves the bytes through the gather join, the shuffle, and the Arrow
 transfer into the kernel (the dominant per-power cost at 40M gathered
 rows). The kernel is the mapInArrow
-partial-aggregation path (see operators/neighbors.py) — with it, the JVM
-fold merge is the measured-fastest combine at this shape; the
-alternative 'arrow' two-pass merge is selectable via ``merge=``.
+partial-aggregation path (see operators/neighbors.py), merged by its JVM
+fold. A second Arrow merge pass used to be selectable and was removed: it
+lost the 20M-edge whole-run A/B, 419.4 vs 342.7 s, because it pays a
+second Python round trip.
 
 Zero-mass cases are defined: a vertex with no neighbors contributes a zero
 vector at every power k ≥ 1 (its final embedding is w_0-weighted projection
@@ -155,20 +156,12 @@ def fastrp_embeddings(
     seed: int = 42,
     hash_method: str = "xxhash64",
     symmetrize: bool = True,
-    merge: str = "fold",
 ) -> DataFrame:
     """FastRP embedding table (vertex_id, embedding: array<double>).
 
     ``weights``: one weight per adjacency power 1..iters (default all 1.0).
     ``symmetrize``: mean-aggregate over the undirected neighborhood (the
     usual FastRP setting); False keeps in-neighbor direction only.
-    ``merge``: partial-combine strategy passed to aggregate_neighbors
-    (both are exact here — the e6 state makes the sums integer). With
-    the mapInArrow kernel the JVM fold merge measured fastest at 20M
-    edges (342.7 vs 419.4 s whole-run A/B, fastrp_merge_ab_r5_20m.json —
-    the arrow merge pays a second Python round trip); 'arrow' remains
-    available for regimes where the JVM fold's per-row overhead on
-    ~|E| partials dominates.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -212,7 +205,7 @@ def fastrp_embeddings(
 
     acc = None
     for k in range(iters):
-        # exact integer neighbor sums (int values in float64), Arrow merge
+        # exact integer neighbor sums (int values in float64)
         agg = aggregate_neighbors(
             x,
             e,
@@ -220,7 +213,6 @@ def fastrp_embeddings(
             feature_col="features",
             agg="mean",
             direction="in",
-            merge=merge,
         )
         # absent vertices (no in-neighbors) are zero vectors at this power
         unit = _l2_normalize_df(

@@ -23,6 +23,9 @@ from pyspark.sql import functions as F
 
 from halvesting_geometric_spark.plans.checkpoint import CheckpointManager
 
+# vertex count up to which the label table broadcasts into the gather join
+_BROADCAST_STATE_THRESHOLD = 1_000_000
+
 
 @dataclass
 class LabelPropResult:
@@ -38,7 +41,6 @@ def label_propagation(
     vertices: DataFrame | None = None,
     max_iter: int = 20,
     fixed_iters: int | None = None,
-    broadcast_state_threshold: int = 1_000_000,
     checkpoint: CheckpointManager | None = None,
     resume: bool = False,
     sync_every: int = 1,
@@ -85,9 +87,10 @@ def label_propagation(
         ).persist(StorageLevel.MEMORY_AND_DISK)
 
     n = vertices.count()
-    # same small-state broadcast strategy as pagerank: the cached sym edge
-    # table is never reshuffled per superstep when the label table broadcasts
-    bcast = n <= broadcast_state_threshold
+    # small-state broadcast (pagerank, by contrast, shuffle-hash joins at
+    # every scale): the cached sym edge table is never reshuffled per
+    # superstep when the label table broadcasts
+    bcast = n <= _BROADCAST_STATE_THRESHOLD
 
     def _b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast else df

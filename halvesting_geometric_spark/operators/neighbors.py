@@ -11,15 +11,21 @@ in-neighbors' feature vectors.
 Scale design — explicit map-side combine, never a per-vertex vector list:
 
 1. gather: ``edges ⋈ features`` on the source id (one shuffle hash join);
-2. partial: an Arrow ``mapInPandas`` kernel reduces each partition to one
+2. partial: an Arrow ``mapInArrow`` kernel reduces each partition to one
    (dst, partial_vector, count) row per distinct dst in the partition —
    C-level ``np.add.at`` / ``np.maximum.at`` per Arrow batch, then one
    final reduce across the task's batch results before emitting (so the
    output really is per-*partition*, not per-10k-row Arrow batch);
-3. merge: groupBy(dst) over the partials. The collected list per dst is
-   bounded by the number of partitions (NOT by degree), so a 10⁸-degree hub
-   contributes at most one partial row per partition — hot vertices cost
-   the same as cold ones after phase 2.
+3. merge: groupBy(dst) over the partials, folded by a JVM
+   collect_list/zip_with. The collected list per dst is bounded by the
+   number of partitions (NOT by degree), so a 10⁸-degree hub contributes at
+   most one partial row per partition — hot vertices cost the same as cold
+   ones after phase 2.
+
+The merge has one path. A second Arrow pass over the dst-repartitioned
+partials used to be selectable; no workload selected it, and it lost the
+20M-edge FastRP A/B (419.4 vs 342.7 s whole run) because it pays a second
+Python round trip.
 
 A pure-Catalyst ``positional`` variant (posexplode → groupBy(dst, pos) →
 re-assemble) cross-checks the kernel in tests; it shuffles dim× more rows
@@ -31,7 +37,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -72,7 +77,6 @@ def aggregate_neighbors(
     agg: str = "mean",
     direction: str = "in",
     _gathered: DataFrame | None = None,
-    merge: str = "fold",
 ) -> DataFrame:
     """Elementwise ``agg`` of each vertex's neighbors' feature vectors.
 
@@ -84,26 +88,9 @@ def aggregate_neighbors(
     of gathering from ``features``/``edges`` — lets message-transforming
     operators (:func:`attention_aggregate`'s per-edge softmax scaling) reuse
     the bounded-state partial kernel unchanged.
-
-    ``merge``: how per-partition partials are combined into per-vertex
-    totals. ``"fold"`` (default) is the original groupBy +
-    collect_list/zip_with fold — fine when partials actually combine
-    map-side (high per-partition dst duplication). ``"arrow"`` repartitions
-    the partials by dst and reduces them in a second run of the SAME Arrow
-    kernel — the right choice when the gather partitioning barely dedups
-    (e.g. FastRP's src-partitioned gather at avg-degree/partitions ≈ 1,
-    where the fold otherwise runs an interpreted zip_with over nearly
-    |E| array rows; measured 2.3× per-power at 40M gathered rows). Both
-    paths shuffle the same partial rows; only the combine implementation
-    differs. Hub-safe either way: a hub dst has at most one partial row
-    per map partition. For integer-valued vectors both orders are exact;
-    for general doubles the two paths can differ in final-ulp summation
-    order (same caveat as any repartitioning of a float aggregate).
     """
     if agg not in _AGGS:
         raise ValueError(f"agg must be one of {_AGGS}, got {agg!r}")
-    if merge not in ("fold", "arrow"):
-        raise ValueError(f"merge must be 'fold' or 'arrow', got {merge!r}")
     if dim < 1:
         raise ValueError(f"dim must be >= 1, got {dim}")
     gathered = (
@@ -131,11 +118,13 @@ def aggregate_neighbors(
     # hold the whole partition in the worker)
     _REDUCE_CAP = 262_144
 
-    def make_partial(vec_name: str, cnt_name: str | None):
-        """Bounded per-partition reducer over (dst, <vec_name>[, cnt])
-        rows, as a ``mapInArrow`` kernel. With ``cnt_name`` the rows are
-        themselves partials (the arrow-merge second pass) and their
-        counts are summed through.
+    import pyarrow as pa
+
+    def partial(
+        batches: Iterator["pa.RecordBatch"],
+    ) -> Iterator["pa.RecordBatch"]:
+        """Bounded per-partition reducer over (dst, vec) rows, as a
+        ``mapInArrow`` kernel.
 
         mapInArrow instead of mapInPandas because the pandas conversion
         materializes every list row as its own small ndarray (one Python
@@ -145,151 +134,108 @@ def aggregate_neighbors(
         itself (np.unique + ufunc.at per batch, same _REDUCE_CAP
         folding cadence) is unchanged, so partial values are
         bit-identical to the previous pandas kernel."""
-        import pyarrow as pa
+        acc_dst: list[np.ndarray] = []
+        acc_vec: list[np.ndarray] = []
+        acc_cnt: list[np.ndarray] = []
+        acc_rows = 0
+        dst_type = None
 
-        def partial(
-            batches: Iterator["pa.RecordBatch"],
-        ) -> Iterator["pa.RecordBatch"]:
-            acc_dst: list[np.ndarray] = []
-            acc_vec: list[np.ndarray] = []
-            acc_cnt: list[np.ndarray] = []
-            acc_rows = 0
-            dst_type = None
+        def fold() -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+            return _reduce(
+                np.concatenate(acc_dst),
+                np.vstack(acc_vec),
+                np.concatenate(acc_cnt),
+            )
 
-            def fold() -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-                return _reduce(
-                    np.concatenate(acc_dst),
-                    np.vstack(acc_vec),
-                    np.concatenate(acc_cnt),
-                )
-
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                dcol = b.column("dst")
-                dst_type = dcol.type
-                dst = dcol.to_numpy(zero_copy_only=False)
-                vcol = b.column(vec_name)
-                if vcol.null_count:
-                    raise ValueError("null feature vector in gather")
-                flat = vcol.flatten()
-                # element nulls inside a list would silently become NaN in
-                # the to_numpy() below — fail fast like the null-vector and
-                # width checks
-                if flat.null_count:
-                    raise ValueError("null element inside feature vector")
-                widths = pa.compute.list_value_length(vcol).to_numpy(
-                    zero_copy_only=False
-                )
-                bad = widths[widths != dim]
-                if len(bad):
-                    raise ValueError(
-                        f"feature width {int(bad[0])} != dim={dim}"
-                    )
-                # flatten() honors the batch's slice; one reshape, no
-                # per-row objects
-                mat = (
-                    flat.to_numpy(zero_copy_only=False)
-                    .astype(np.float64, copy=False)
-                    .reshape(-1, dim)
-                )
-                uniq, out, cnt = _reduce(
-                    dst,
-                    mat,
-                    b.column(cnt_name).to_numpy(zero_copy_only=False)
-                    if cnt_name is not None
-                    else np.ones(len(dst), dtype=np.int64),
-                )
-                acc_dst.append(uniq)
-                acc_vec.append(out)
-                acc_cnt.append(cnt)
-                acc_rows += len(uniq)
-                if acc_rows > _REDUCE_CAP:
-                    uniq, out, cnt = fold()
-                    acc_dst, acc_vec, acc_cnt = [uniq], [out], [cnt]
-                    acc_rows = len(uniq)
-            if not acc_dst:
-                return
-            # final reduce across the task's batches: one partial row per
-            # distinct dst in the PARTITION — a hub emits #partitions rows
-            # total
-            uniq, out, cnt = fold()
-            n = len(uniq)
-            # offsets must stay inside int32 for a plain ListArray; with the
-            # _REDUCE_CAP row bound this only trips for very wide vectors
-            # (dim >= ~8200), where silent int32 wraparound would corrupt
-            # the list offsets — fail fast instead
-            if n * dim >= 2**31:
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            dcol = b.column("dst")
+            dst_type = dcol.type
+            dst = dcol.to_numpy(zero_copy_only=False)
+            vcol = b.column("vec")
+            if vcol.null_count:
+                raise ValueError("null feature vector in gather")
+            flat = vcol.flatten()
+            # element nulls inside a list would silently become NaN in
+            # the to_numpy() below — fail fast like the null-vector and
+            # width checks
+            if flat.null_count:
+                raise ValueError("null element inside feature vector")
+            widths = pa.compute.list_value_length(vcol).to_numpy(
+                zero_copy_only=False
+            )
+            bad = widths[widths != dim]
+            if len(bad):
                 raise ValueError(
-                    f"partial batch too wide for int32 list offsets: "
-                    f"{n} rows x dim={dim}"
+                    f"feature width {int(bad[0])} != dim={dim}"
                 )
-            offsets = pa.array(
-                (np.arange(n + 1, dtype=np.int64) * dim).astype(np.int32)
+            # flatten() honors the batch's slice; one reshape, no
+            # per-row objects
+            mat = (
+                flat.to_numpy(zero_copy_only=False)
+                .astype(np.float64, copy=False)
+                .reshape(-1, dim)
             )
-            pvec = pa.ListArray.from_arrays(
-                offsets, pa.array(out.ravel(), type=pa.float64())
+            uniq, out, cnt = _reduce(dst, mat, np.ones(len(dst), dtype=np.int64))
+            acc_dst.append(uniq)
+            acc_vec.append(out)
+            acc_cnt.append(cnt)
+            acc_rows += len(uniq)
+            if acc_rows > _REDUCE_CAP:
+                uniq, out, cnt = fold()
+                acc_dst, acc_vec, acc_cnt = [uniq], [out], [cnt]
+                acc_rows = len(uniq)
+        if not acc_dst:
+            return
+        # final reduce across the task's batches: one partial row per
+        # distinct dst in the PARTITION — a hub emits #partitions rows
+        # total
+        uniq, out, cnt = fold()
+        n = len(uniq)
+        # offsets must stay inside int32 for a plain ListArray; with the
+        # _REDUCE_CAP row bound this only trips for very wide vectors
+        # (dim >= ~8200), where silent int32 wraparound would corrupt
+        # the list offsets — fail fast instead
+        if n * dim >= 2**31:
+            raise ValueError(
+                f"partial batch too wide for int32 list offsets: "
+                f"{n} rows x dim={dim}"
             )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(uniq, type=dst_type),
-                    pvec,
-                    pa.array(cnt, type=pa.int64()),
-                ],
-                names=["dst", "pvec", "cnt"],
-            )
-
-        return partial
+        offsets = pa.array(
+            (np.arange(n + 1, dtype=np.int64) * dim).astype(np.int32)
+        )
+        pvec = pa.ListArray.from_arrays(
+            offsets, pa.array(out.ravel(), type=pa.float64())
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(uniq, type=dst_type),
+                pvec,
+                pa.array(cnt, type=pa.int64()),
+            ],
+            names=["dst", "pvec", "cnt"],
+        )
 
     # dst keeps the id column's own type (long vertex ids, or string ids in
     # typed/hetero graphs) — np.unique and the groupBy merge are type-agnostic
     _dst_t = gathered.schema["dst"].dataType.simpleString()
     _schema = f"dst {_dst_t}, pvec array<double>, cnt long"
-    partials = gathered.mapInArrow(make_partial("vec", None), _schema)
-    if merge == "arrow":
-        # hash-partition the partials by dst and run the same kernel
-        # again: every dst now lives in exactly one partition, so the
-        # second pass emits exactly one final row per vertex — no
-        # groupBy, no interpreted fold
-        try:
-            n_shuffle = int(
-                gathered.sparkSession.conf.get(
-                    "spark.sql.shuffle.partitions", "200"
-                )
-            )
-        except ValueError:
-            # some platforms report a non-numeric value (e.g. "auto")
-            n_shuffle = partials.rdd.getNumPartitions() or 200
-        merged = (
-            partials.repartition(n_shuffle, "dst")
-            .mapInArrow(make_partial("pvec", "cnt"), _schema)
-            .select(
-                "dst",
-                F.col("pvec").alias("_acc"),
-                F.col("cnt").alias("nbr_count"),
-            )
-        )
-    else:
-        zero = (
-            F.array_repeat(F.lit(float("-inf")), dim)
-            if is_max
-            else F.array_repeat(F.lit(0.0), dim)
-        )
-        combine = (
-            (
-                lambda acc, v: F.zip_with(
-                    acc, v, lambda a, b: F.greatest(a, b)
-                )
-            )
-            if is_max
-            else (lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b))
-        )
-        merged = partials.groupBy("dst").agg(
-            F.aggregate(F.collect_list("pvec"), zero, combine).alias(
-                "_acc"
-            ),
-            F.sum("cnt").alias("nbr_count"),
-        )
+    partials = gathered.mapInArrow(partial, _schema)
+    zero = (
+        F.array_repeat(F.lit(float("-inf")), dim)
+        if is_max
+        else F.array_repeat(F.lit(0.0), dim)
+    )
+    combine = (
+        (lambda acc, v: F.zip_with(acc, v, lambda a, b: F.greatest(a, b)))
+        if is_max
+        else (lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b))
+    )
+    merged = partials.groupBy("dst").agg(
+        F.aggregate(F.collect_list("pvec"), zero, combine).alias("_acc"),
+        F.sum("cnt").alias("nbr_count"),
+    )
     if agg == "mean":
         vec = F.transform(F.col("_acc"), lambda x: x / F.col("nbr_count"))
     else:

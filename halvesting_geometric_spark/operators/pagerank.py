@@ -1,13 +1,22 @@
-"""PageRank as a skew-aware, checkpointed gather-scatter superstep loop.
+"""PageRank as a checkpointed gather-scatter superstep loop.
 
 Substrate parity with the reference: each superstep has exactly the shape of
 one SAGE message-passing layer — gather = embedding lookup join
 (``/root/reference/halvesting_geometric/modules/link_classifier.py:33-34``),
 scatter = per-destination aggregate (``.../modules/sage.py:53-54,78-82``) — but
 re-expressed as DataFrame joins + hash aggregates that Catalyst/AQE plan, with
-explicit skew handling (salting / Arrow bincount partials / hot-vertex
-broadcast) and per-iteration Iceberg/parquet checkpoints so any iteration is
-resumable (north_rule).
+per-iteration Iceberg/parquet checkpoints so any iteration is resumable
+(north_rule).
+
+Skew: the scatter is a plain ``groupBy(dst).sum``. Its map-side partial
+aggregate already bounds a hot destination to one row per map partition,
+and AQE's skew-join splitting covers the gather. The salted, Arrow-bincount
+and hot-source-broadcast alternatives were removed because they lost on the
+100k-edge power-law input (seed 42, 6 steps, CPU seconds of the JVM): 10.9
+and 11.4 CPU-s against 7.9 for the default, and 18.9 against 10.1 for the
+hot-source split, which filtered the src-partitioned edge cache and so moved
+no edge off a hot partition (that input's hubs are destinations anyway:
+max in-degree 4,690, max out-degree 24).
 
 Semantics: classic damped PageRank with dangling-mass redistribution —
 
@@ -26,7 +35,6 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from halvesting_geometric_spark.operators.skew import partial_sum_arrow, salted_sum
 from halvesting_geometric_spark.plans.checkpoint import CheckpointManager
 
 
@@ -40,20 +48,6 @@ class PageRankResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _scatter(msgs: DataFrame, agg_mode: str, n_salts: int) -> DataFrame:
-    """groupBy(dst).sum(contrib) under the selected skew strategy."""
-    if agg_mode == "groupby":
-        return msgs.groupBy("dst").agg(F.sum("contrib").alias("msg_sum"))
-    if agg_mode == "salted":
-        return salted_sum(
-            msgs, key="dst", value="contrib", n_salts=n_salts, salt_from="src",
-            out="msg_sum",
-        )
-    if agg_mode == "arrow":
-        return partial_sum_arrow(msgs, key="dst", value="contrib", out="msg_sum")
-    raise ValueError(f"unknown agg_mode {agg_mode!r}")
-
-
 def pagerank(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -61,10 +55,6 @@ def pagerank(
     tol: float = 1e-6,
     max_iter: int = 100,
     fixed_iters: int | None = None,
-    agg_mode: str = "groupby",
-    n_salts: int = 16,
-    hot_src_threshold: int | None = None,
-    broadcast_state_threshold: int = 0,
     checkpoint: CheckpointManager | None = None,
     checkpoint_interval: int = 1,
     resume: bool = False,
@@ -93,13 +83,6 @@ def pagerank(
     superset of all edge endpoints — contributions to a dst missing from
     ``vertices`` are silently dropped and total rank mass leaks below 1
     (``build_vertices`` guarantees the superset).
-
-    ``hot_src_threshold``: out-degree above which a source vertex's rank is
-    *broadcast* to its (many) edge rows instead of shuffled — the hot-vertex
-    broadcast path of the north_star. The edge table is split once
-    (loop-invariant) into hot/cold blocks; per iteration the hot block joins a
-    broadcast of the few hot ranks while the cold block takes the normal
-    shuffle join.
 
     ``delta_check_every``: supersteps batched into ONE Spark job (1-8). The
     per-job driver floor (scheduling + AQE replanning, measured ~0.5s at
@@ -184,9 +167,9 @@ def pagerank(
         ).persist(StorageLevel.MEMORY_AND_DISK)
         vertices.unpersist()
         vertices = vertices2
-    # loop-invariant edge table, hash-partitioned on the gather key once: when
-    # the shuffle-join path is taken (big vertex state), each iteration only
-    # shuffles the small rank table — the cached edge partitioning is reused
+    # loop-invariant edge table, hash-partitioned on the gather key once: each
+    # iteration's shuffle join then moves only the small rank table — the
+    # cached edge partitioning is reused
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     _ecols = (
         [
@@ -204,37 +187,6 @@ def pagerank(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     m = contrib_edges.count()  # materialize the loop-invariant once
-
-    hot_edges = cold_edges = None
-    hot_src: set[int] | None = None
-    if hot_src_threshold is not None:
-        # the hot set becomes a literal isin() predicate and a per-superstep
-        # broadcast — cap it so a mis-set threshold can't build a huge plan;
-        # the truncated tail still has the highest degrees below the cap
-        max_hot = 4096
-        hot_rows = (
-            out_deg.filter(F.col("out_deg") >= hot_src_threshold)
-            .orderBy(F.col("out_deg").desc(), F.col("src").asc())
-            .limit(max_hot + 1)
-            .collect()
-        )
-        if len(hot_rows) > max_hot:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "pagerank: hot_src_threshold=%s selects >%d vertices; "
-                "keeping only the %d hottest (raise the threshold)",
-                hot_src_threshold, max_hot, max_hot,
-            )
-            hot_rows = hot_rows[:max_hot]
-        hot_src = {r["src"] for r in hot_rows}
-        hot_edges = contrib_edges.filter(
-            F.col("src").isin(list(hot_src) or [-1])
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        cold_edges = contrib_edges.filter(
-            ~F.col("src").isin(list(hot_src) or [-1])
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        hot_edges.count(), cold_edges.count()
 
     start_iter = 0
     if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
@@ -284,25 +236,17 @@ def pagerank(
         )
         dangling = n_dangling / float(n)
 
-    # Vertex-state join strategy. The default is the shuffle-hash path at
-    # EVERY scale (threshold 0): the cached edge table is pre-partitioned on
-    # the gather key, so a shuffle join moves only the V-row state, while a
-    # broadcast build serializes V rows through the driver once per
+    # Vertex-state join strategy: _advance hints both state joins
+    # shuffle_hash at EVERY scale. The cached edge table is pre-partitioned
+    # on the gather key, so a shuffle join moves only the V-row state, while
+    # a broadcast build serializes V rows through the driver once per
     # superstep — measured SLOWER at both bench scales (sf0.1: 9.9 vs 8.2 s
-    # to 1e-6; sf1.0: 29.2 vs 16.4 s) and it caps multi-executor scaling
-    # (the round-5 _b() note). A positive threshold re-enables per-superstep
-    # state broadcast for callers that want it (e.g. few-iteration runs on
-    # broadcast-friendly clusters).
-    bcast_state = 0 < n <= broadcast_state_threshold
-
-    def _b(df: DataFrame) -> DataFrame:
-        # Above the threshold the hint matters as much as the absence of
-        # broadcast: without it AQE auto-broadcasts any state table under
-        # spark.sql.autoBroadcastJoinThreshold, and the per-superstep
-        # driver-side hashmap build is serial — it caps scaling. shuffle_hash
-        # keeps the state side a parallel shuffled build against the cached,
-        # pre-partitioned edge table (no sort, no edge re-shuffle).
-        return F.broadcast(df) if bcast_state else df.hint("shuffle_hash")
+    # to 1e-6; sf1.0: 29.2 vs 16.4 s), and its serial driver-side hashmap
+    # build caps multi-executor scaling. The hint matters as much as the
+    # absence of an explicit broadcast: without it AQE auto-broadcasts any
+    # state table under spark.sql.autoBroadcastJoinThreshold. shuffle_hash
+    # keeps the state side a parallel shuffled build against the cached,
+    # pre-partitioned edge table (no sort, no edge re-shuffle).
 
     def _advance(state_df: DataFrame, dang_scalar: float | None):
         """One lazy superstep over ``state_df`` (vertex_id, rank, out_deg).
@@ -328,28 +272,18 @@ def pagerank(
             if weighted
             else F.col("contrib")
         )
-        # salted scatter derives its salt from src; other modes don't need it
-        mcols = (
-            [F.col("src"), F.col("dst"), _c]
-            if agg_mode == "salted"
-            else [F.col("dst"), _c]
+        sums = (
+            contrib_edges.join(rank_w.hint("shuffle_hash"), "src")
+            .select(F.col("dst"), _c)
+            .groupBy("dst")
+            .agg(F.sum("contrib").alias("msg_sum"))
         )
-        if hot_src is not None and hot_edges is not None:
-            hot_w = rank_w.filter(F.col("src").isin(list(hot_src) or [-1]))
-            msgs = (
-                cold_edges.join(_b(rank_w), "src")
-                .select(*mcols)
-                .unionByName(
-                    hot_edges.join(F.broadcast(hot_w), "src").select(*mcols)
-                )
-            )
-        else:
-            msgs = contrib_edges.join(_b(rank_w), "src").select(*mcols)
-        sums = _scatter(msgs, agg_mode, n_salts)
         joined = state_df.select(
             "vertex_id", F.col("rank").alias("old_rank"), "out_deg"
         ).join(
-            _b(sums.select(F.col("dst").alias("vertex_id"), "msg_sum")),
+            sums.select(F.col("dst").alias("vertex_id"), "msg_sum").hint(
+                "shuffle_hash"
+            ),
             "vertex_id",
             "left",
         )

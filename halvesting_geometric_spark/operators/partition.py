@@ -27,7 +27,10 @@ capacity.  This is the deterministic synchronous variant:
   overshoot (measured 2.9× over cap on a 20M-edge power-law graph before
   the quota).  The admission window partitions by target label (k
   partitions, k small; migrant sets shrink per round) and is a
-  spillable sort, not a buffered group.
+  spillable sort, not a buffered group.  A two-phase range-partitioned
+  admission for hub labels used to be selectable above a vertex-count
+  threshold; no workload reached it, and it lost to the window at 2M
+  vertices / k=64 (139.8 vs 72.1 s whole run), so it was removed.
 
 Engine-new: the reference shards work only by dask row ranges
 (``/root/reference/halvesting_geometric/utils/data/link_prediction_metadata.py:209-218``),
@@ -52,19 +55,9 @@ def balanced_partition(
     k: int = 8,
     rounds: int = 3,
     slack_permille: int = 100,
-    two_phase_admission_threshold: int = 50_000_000,
 ) -> DataFrame:
     """k-way balanced vertex partition labels after ``rounds`` migration
     rounds.  Returns ``(vertex_id, label)`` with labels in ``[0, k)``.
-
-    ``two_phase_admission_threshold``: vertex count above which the
-    per-round admission ranking switches from the per-label window (one
-    sort task per label — fastest while ~V/k rows fit one task, measured
-    72 s vs 140 s whole-run at 2M vertices / k=64) to the two-phase
-    range-partitioned rank reconstruction (hub labels sort across many
-    spillable tasks — the only viable shape at 10⁹ vertices).  Both paths
-    admit the IDENTICAL set: the admission key (label, gain DESC, id) is a
-    total order and the two-phase rank is exactly ``row_number`` over it.
     """
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
@@ -130,118 +123,22 @@ def balanced_partition(
         )
         # deterministic per-label admission quota: top (cap − load) wanting
         # migrants by (gain, id); leavers only free space, so load ≤ cap
-        # holds after every round.
-        #
-        if n <= two_phase_admission_threshold:
-            # per-label window: ~V/k rows per sort task — the fastest
-            # admission shape while that fits one task (see docstring)
-            quota = loads.select(
-                F.col("label").alias("best_label"),
-                (F.lit(cap) - F.col("load")).alias("quota"),
-            )
-            adm = (
-                mig.withColumn(
-                    "rk",
-                    F.row_number().over(
-                        Window.partitionBy("best_label").orderBy(
-                            F.col("best_cnt").desc(), F.col("vertex_id").asc()
-                        )
-                    ),
-                )
-                .join(F.broadcast(quota), "best_label")
-                .filter(F.col("rk") <= F.col("quota"))
-                .select("vertex_id", F.col("best_label").alias("new_label"))
-            )
-            state = (
-                state.join(adm, "vertex_id", "left")
-                .select(
-                    "vertex_id",
-                    F.coalesce("new_label", "label").cast("long").alias("label"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            counts.unpersist()
-            continue
-        # Two-phase ranked admission (round-5 verdict item 3): the former
-        # Window.partitionBy(best_label) ranked ~V/k migrants in ONE task
-        # per label — the round's longest pole at 100× scale. Instead,
-        # range-partition the migrants by the full admission sort key
-        # (label, gain DESC, id), collect the per-(partition, label) counts
-        # (≤ partitions·k longs), and reconstruct each row's global
-        # within-label rank as a pure Catalyst expression:
-        #   rank = offset_of_label_in_earlier_partitions
-        #        + (within-partition record index − label block start).
-        # Identical admitted set (the sort key is a total order), but hub
-        # labels now sort across MANY spillable tasks (same pattern as
-        # ids.dense_ids_scalable).
-        quotas = {
-            int(r["label"]): cap - int(r["load"]) for r in loads.collect()
-        }
-        spark = edges.sparkSession
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        ranged = (
-            mig.repartitionByRange(
-                n_parts,
-                F.col("best_label").asc(),
-                F.col("best_cnt").desc(),
-                F.col("vertex_id").asc(),
-            )
-            .sortWithinPartitions(
-                F.col("best_label").asc(),
-                F.col("best_cnt").desc(),
-                F.col("vertex_id").asc(),
-            )
-            # pin the partitioning between the counting pass and the rank
-            # expression (RangePartitioner re-samples on recompute — same
-            # fail-over-wrong contract as dense_ids_scalable)
-            .localCheckpoint(eager=True)
-        )
-        pl_counts = (
-            ranged.groupBy(
-                F.spark_partition_id().alias("_pid"),
-                F.col("best_label").alias("_lbl"),
-            )
-            .agg(F.count("*").alias("_cnt"))
-            .collect()
-        )
-        by_pid: dict[int, list[tuple[int, int]]] = {}
-        for r in pl_counts:
-            by_pid.setdefault(int(r["_pid"]), []).append(
-                (int(r["_lbl"]), int(r["_cnt"]))
-            )
-        label_running: dict[int, int] = {}
-        corr_rows: list[tuple[int, int, int, int]] = []
-        for pid in range(n_parts):
-            # labels inside a partition appear in ascending label order
-            # (leading range key), so the block start is the cumsum of
-            # smaller labels' counts in this partition
-            block_start = 0
-            for lbl, cnt in sorted(by_pid.get(pid, [])):
-                corr_rows.append(
-                    (
-                        pid,
-                        lbl,
-                        label_running.get(lbl, 0) - block_start,
-                        quotas.get(lbl, 0),
-                    )
-                )
-                label_running[lbl] = label_running.get(lbl, 0) + cnt
-                block_start += cnt
-        corr_df = spark.createDataFrame(
-            corr_rows or [(0, 0, 0, 0)],
-            "_pid int, best_label long, _corr long, _quota long",
+        # holds after every round. Per-label window: ~V/k rows per sort task.
+        quota = loads.select(
+            F.col("label").alias("best_label"),
+            (F.lit(cap) - F.col("load")).alias("quota"),
         )
         adm = (
-            ranged.select(
-                F.spark_partition_id().alias("_pid"),
-                F.monotonically_increasing_id()
-                .bitwiseAND(F.lit((1 << 33) - 1))
-                .alias("_idx"),
-                "vertex_id",
-                "best_label",
+            mig.withColumn(
+                "rk",
+                F.row_number().over(
+                    Window.partitionBy("best_label").orderBy(
+                        F.col("best_cnt").desc(), F.col("vertex_id").asc()
+                    )
+                ),
             )
-            .join(F.broadcast(corr_df), ["_pid", "best_label"])
-            .filter(F.col("_idx") + F.col("_corr") < F.col("_quota"))
+            .join(F.broadcast(quota), "best_label")
+            .filter(F.col("rk") <= F.col("quota"))
             .select("vertex_id", F.col("best_label").alias("new_label"))
         )
         state = (

@@ -1,29 +1,22 @@
-"""Skew toolkit: degree histograms, hot-vertex detection, salted aggregation.
+"""Skew probe: the degree histogram of an edge table.
 
 The reference does nothing about skew although the HAL citation graph is
 power-law (SURVEY.md §4.1). At 10^12-turn scale a handful of hot destination
-vertices dominate the ``groupBy(dst)`` scatter of every superstep. Three
-mitigations, all semantics-preserving (invariance-tested):
+vertices dominate the ``groupBy(dst)`` scatter of every superstep. The engine
+handles that with Spark's own machinery and no extra operator:
 
-1. Spark's own map-side partial aggregation absorbs most groupBy skew.
-2. ``salted_sum``: explicit two-phase aggregate — salt the key with a hash of
-   the *other* endpoint (deterministic, no RNG), partial-sum per
-   ``(key, salt)``, final-sum per key. Caps any single reducer's input at
-   ``|hot key| / n_salts``.
-3. AQE skew-join splitting for the gather join (enabled in session.py).
+1. the scatter is a sum, so Spark's map-side partial aggregate already bounds
+   a hot key to one row per map partition before the shuffle;
+2. AQE skew-join splitting covers the gather join (enabled in session.py).
 
-Also here: ``partial_sum_arrow`` — a numpy ``bincount`` partial aggregator
-inside ``mapInPandas`` (the per-partition CSR-block scatter kernel the
-north_star asks for): each Arrow batch is reduced to at most one row per
-distinct key before the shuffle.
+The explicit salted two-phase sum and the numpy ``bincount`` partial
+aggregator that used to live here were removed: no workload selected them,
+and as PageRank's scatter on the 100k-edge power-law input (seed 42, 6
+steps) they took 10.9 and 11.4 CPU-s against 7.9 for the plain ``groupBy``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,80 +30,3 @@ def degree_histogram(edges: DataFrame, side: str = "dst") -> DataFrame:
         .agg(F.count("*").alias("n_vertices"))
         .orderBy(F.col("degree").desc())
     )
-
-
-def cardinality_probe(df: DataFrame, *cols: str, rsd: float = 0.05) -> dict:
-    """Approximate distinct counts per column (HyperLogLog++) — the cheap
-    pre-shuffle probe that decides whether a key needs salting (SURVEY §2.4:
-    the engine's only approximate aggregate)."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    row = df.agg(
-        *[F.approx_count_distinct(c, rsd=rsd).alias(c) for c in cols]
-    ).first()
-    return {c: int(row[c]) for c in cols}
-
-
-def hot_vertices(edges: DataFrame, side: str = "dst", min_degree: int = 100_000) -> DataFrame:
-    """Vertices whose degree exceeds ``min_degree`` — candidates for the
-    broadcast-state path (their state is shipped to every task instead of
-    shuffling their entire neighborhood to one reducer)."""
-    return (
-        edges.groupBy(side)
-        .agg(F.count("*").alias("degree"))
-        .filter(F.col("degree") >= min_degree)
-    )
-
-
-def salted_sum(
-    df: DataFrame,
-    key: str,
-    value: str,
-    n_salts: int = 16,
-    salt_from: str | None = None,
-    out: str | None = None,
-) -> DataFrame:
-    """Two-phase ``groupBy(key).sum(value)`` with deterministic salting.
-
-    ``salt_from`` names a column whose hash spreads the hot key's rows
-    (defaults to the value column's row hash via xxhash64 of all columns would
-    be nondeterministic under recompute — so we require a real column).
-    """
-    out = out or f"sum_{value}"
-    salt_col = F.pmod(F.xxhash64(F.col(salt_from or value)), F.lit(n_salts))
-    partial = (
-        df.withColumn("_salt", salt_col)
-        .groupBy(key, "_salt")
-        .agg(F.sum(value).alias("_partial"))
-    )
-    return partial.groupBy(key).agg(F.sum("_partial").alias(out))
-
-
-def partial_sum_arrow(
-    df: DataFrame, key: str, value: str, out: str | None = None
-) -> DataFrame:
-    """Map-side combine as an explicit numpy kernel + final hash aggregate.
-
-    Within each Arrow batch, keys are factorized and summed with
-    ``np.bincount`` (the CSR-block scatter primitive: O(batch) with no Python
-    loop), so the shuffle carries ≤ distinct-keys-per-batch rows. The final
-    ``groupBy(key).sum`` merges partials. Semantics identical to a plain
-    ``groupBy().sum()``; exists to (a) demonstrate the vectorized kernel path
-    the north_star specifies and (b) precisely control pre-shuffle reduction.
-    """
-    out = out or f"sum_{value}"
-
-    def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes, uniques = pd.factorize(pdf[key], sort=False)
-            sums = np.bincount(
-                codes, weights=pdf[value].to_numpy(dtype=np.float64)
-            )
-            yield pd.DataFrame({key: uniques, "_partial": sums})
-
-    partial = df.select(key, value).mapInPandas(
-        combine, schema=f"{key} long, _partial double"
-    )
-    return partial.groupBy(key).agg(F.sum("_partial").alias(out))

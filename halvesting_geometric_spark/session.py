@@ -17,18 +17,35 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the host's RAM as a ``spark.driver.memory`` value (``"<n>m"``),
+    at least 1 GiB; Spark's own ``"1g"`` when ``meminfo`` is unreadable or
+    has no ``MemTotal`` line. In local mode the driver JVM is the whole
+    engine, and the other half stays for the Python workers and the OS."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{max(1024, total_mb // 2)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "1g"
+
+
 def get_spark(
     app_name: str = "halvesting_geometric_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a local SparkSession tuned for this engine.
 
     ``cores=None`` → ``local[*]``. On a real cluster the same confs apply;
     only ``master`` changes (spark-submit owns it), so callers outside tests
-    should not pass ``cores``.
+    should not pass ``cores``. ``driver_memory=None`` → half of host RAM
+    (:func:`_default_driver_memory`).
     """
     cores_env = os.environ.get("SPARK_GRAFT_CPUS")
     if cores is None and cores_env:
@@ -45,7 +62,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", driver_memory)
+        .config("spark.driver.memory", driver_memory or _default_driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -5,9 +5,9 @@ Closes the loop between operators/partition.py and the north metric:
 the balanced k-way labels are used to CLUSTER the edge table by the
 destination's partition label (the layout a real cluster would persist
 via sources/bucketed.write_bucketed with ``pl`` as the bucket key), and
-the superstep is run with a broadcast rank state so the gather join
-preserves the edge layout (the engine's hot-set/broadcast-state path —
-pagerank.py's ``broadcast_state_threshold``).  The scatter
+the superstep is run with an explicitly broadcast rank state so the
+gather join preserves the edge layout (pagerank.py itself shuffle-hash
+joins the state at every scale).  The scatter
 ``groupBy(dst).sum`` then map-side-combines WITHIN layout partitions:
 
 - hash-by-src layout: each partition sees ~uniformly random dsts, so

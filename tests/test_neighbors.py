@@ -107,41 +107,3 @@ def test_aggregate_neighbors_validates(spark):
         aggregate_neighbors(fdf, edges, dim=DIM, direction="both")
     with pytest.raises(Exception, match="feature width"):
         aggregate_neighbors(fdf, edges, dim=DIM + 1).collect()
-
-
-@pytest.mark.parametrize("agg", ["mean", "sum", "max"])
-def test_aggregate_neighbors_arrow_merge_matches_fold(spark, agg):
-    # integer-valued features: both merge paths are exact, so results
-    # must be identical (not just allclose)
-    rng = np.random.default_rng(3)
-    n = 40
-    edges = spark.createDataFrame(
-        [
-            (int(a), int(b))
-            for a, b in rng.integers(0, n, size=(300, 2))
-            if a != b
-        ],
-        "src long, dst long",
-    )
-    fdf = spark.createDataFrame(
-        [
-            (v, [float(x) for x in rng.integers(-5, 6, size=DIM)])
-            for v in range(n)
-        ],
-        "vertex_id long, features array<double>",
-    )
-    fold = {
-        r.vertex_id: (r.nbr_count, tuple(r.agg_vec))
-        for r in aggregate_neighbors(
-            fdf, edges, dim=DIM, agg=agg, merge="fold"
-        ).collect()
-    }
-    arrow = {
-        r.vertex_id: (r.nbr_count, tuple(r.agg_vec))
-        for r in aggregate_neighbors(
-            fdf, edges, dim=DIM, agg=agg, merge="arrow"
-        ).collect()
-    }
-    assert fold == arrow
-    with pytest.raises(ValueError, match="merge must be"):
-        aggregate_neighbors(fdf, edges, dim=DIM, merge="sorted")

@@ -70,22 +70,6 @@ def test_pagerank_extracted_graph_vs_oracle(spark):
     assert np.allclose(arr, exp, atol=1e-6)
 
 
-def test_pagerank_agg_modes_and_hot_broadcast_invariant(spark):
-    """Salting / Arrow-bincount partials / hot-vertex broadcast must be
-    semantics-preserving (SURVEY.md §5.2 item 5)."""
-    tr = generate_transcripts(spark, 60, seed=11)
-    g = build_graph(tr)
-    n = g.num_vertices()
-    base = _ranks_array(pagerank(g.edges, g.vertices, fixed_iters=8), n)
-    for kwargs in (
-        {"agg_mode": "salted", "n_salts": 4},
-        {"agg_mode": "arrow"},
-        {"hot_src_threshold": 3},
-    ):
-        got = _ranks_array(pagerank(g.edges, g.vertices, fixed_iters=8, **kwargs), n)
-        assert np.allclose(got, base, atol=1e-9), kwargs
-
-
 def test_pagerank_batched_delta_check_matches_per_iteration(spark):
     """delta_check_every > 1 batches supersteps into one job via in-plan
     dangling aggregates — the fixpoint and intermediate math must match

@@ -137,24 +137,3 @@ def test_validation(spark):
         balanced_partition(e, v, rounds=0)
     with pytest.raises(ValueError):
         balanced_partition(e, v, slack_permille=-1)
-
-
-def test_two_phase_admission_matches_window(spark):
-    """The at-scale two-phase ranked admission admits the identical set as
-    the per-label window path (total-order admission key), so labels are
-    bit-identical across the threshold switch."""
-    rng = random.Random(7)
-    pairs = list({(rng.randrange(60), rng.randrange(60)) for _ in range(300)})
-    pairs = [(a, b) for a, b in pairs if a != b]
-    e, v = _edges_df(spark, pairs), _verts_df(spark, 60)
-    window = {
-        r.vertex_id: r.label
-        for r in balanced_partition(e, v, k=4, rounds=3).collect()
-    }
-    two_phase = {
-        r.vertex_id: r.label
-        for r in balanced_partition(
-            e, v, k=4, rounds=3, two_phase_admission_threshold=0
-        ).collect()
-    }
-    assert two_phase == window

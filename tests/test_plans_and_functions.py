@@ -174,3 +174,18 @@ def test_json_long_field_null_on_malformed(spark):
     )
     out = [r.k for r in df.select(json_long_field("props", "k").alias("k")).collect()]
     assert out == [7, None, None, None, None]
+
+
+def test_default_driver_memory_is_half_of_host_ram(tmp_path):
+    """Derived from MemTotal without starting a session; Spark's own 1g
+    when the file is missing or has no MemTotal line."""
+    from halvesting_geometric_spark.session import _default_driver_memory
+
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemFree:  1000 kB\nMemTotal:  16000000 kB\n")
+    assert _default_driver_memory(str(meminfo)) == "7812m"
+    meminfo.write_text("MemTotal:  1024000 kB\n")
+    assert _default_driver_memory(str(meminfo)) == "1024m"
+    meminfo.write_text("MemFree:  1000 kB\n")
+    assert _default_driver_memory(str(meminfo)) == "1g"
+    assert _default_driver_memory(str(tmp_path / "absent")) == "1g"
