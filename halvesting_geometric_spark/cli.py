@@ -134,7 +134,10 @@ def main(argv: list[str] | None = None) -> int:
                     "convergence on each batch's last step")
     args = ap.parse_args(argv)
 
-    # under spark-submit the session (master, executors) is externally owned
+    # under spark-submit the session (master, executors) is externally owned,
+    # and the driver JVM starts before this runs: pass get_spark's JIT/GC
+    # policy with --driver-java-options "-XX:TieredStopAtLevel=1
+    # -XX:+UseParallelGC" (see session.py)
     spark = SparkSession.builder.appName(
         f"hgs-{args.algorithm}"
     ).getOrCreate()

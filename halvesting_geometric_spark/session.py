@@ -6,6 +6,30 @@ Reference analog: the dask multiprocessing setup at
 scale-ready: AQE on (runtime skew-join + partition coalescing), Arrow on (all
 Python-side kernels are vectorized batches), shuffle partitions sized to the
 local core count rather than the 200 default.
+
+Driver JVM policy (``_DRIVER_JAVA_OPTIONS``): ``-XX:TieredStopAtLevel=1``
+keeps the JIT at C1 and never starts C2, and ``-XX:+UseParallelGC`` swaps
+G1 for the throughput collector. In local mode the driver JVM is the whole
+engine, and the engine's workloads are one query per JVM, so a cold JVM
+spends much of its CPU compiling Spark and Scala framework code that never
+runs long enough to repay a C2 compile. Per JVM thread, an untraced
+``perfbench`` ``transcripts`` run (seed 42, 4 cores, median of 8) used 164
+CPU-s: 76 on the C2 compiler threads, 12 on C1, 25 on executor tasks, 22 on
+the py4j threads that run Catalyst planning and about 11 on G1. With the
+policy, the bench's ``query_cpu_s`` median went 142.7 → 81.8 on
+``transcripts`` (10 alternating pairs) and 73.3 → 34.7 on ``powerlaw`` (5
+pairs); README's "Driver JVM policy" has each flag's own A/B and the
+steady-state guards. C1 and C2 give bit-identical doubles (JDK 17 floating
+point is strict, JEP 306), and plans and job counts do not depend on the
+JIT. Callers append to these options through ``extra_conf``'s
+``spark.driver.extraJavaOptions``; HotSpot takes the last occurrence of a
+flag, so ``-XX:TieredStopAtLevel=4`` brings C2 back, while G1 needs
+``-XX:-UseParallelGC -XX:+UseG1GC`` (two collectors selected at once stop
+the JVM). A JVM that runs many queries for a long time repays C2: the
+test session appends ``-XX:TieredStopAtLevel=4 -XX:-UseParallelGC
+-XX:+UseG1GC`` (``tests/conftest.py``). The options apply only when this
+call starts the JVM: under spark-submit pass them with
+``--driver-java-options``.
 """
 
 from __future__ import annotations
@@ -15,6 +39,10 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+_DRIVER_JAVA_OPTIONS = (
+    "-Djava.net.preferIPv4Stack=true -XX:TieredStopAtLevel=1 -XX:+UseParallelGC"
+)
 
 
 def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -33,6 +61,12 @@ def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     return "1g"
 
 
+def _driver_java_options(extra: str | None = None) -> str:
+    """``_DRIVER_JAVA_OPTIONS`` with a caller's options appended, so the
+    caller's occurrence of a flag is the last and wins."""
+    return f"{_DRIVER_JAVA_OPTIONS} {extra}" if extra else _DRIVER_JAVA_OPTIONS
+
+
 def get_spark(
     app_name: str = "halvesting_geometric_spark",
     cores: int | None = None,
@@ -45,13 +79,17 @@ def get_spark(
     ``cores=None`` → ``local[*]``. On a real cluster the same confs apply;
     only ``master`` changes (spark-submit owns it), so callers outside tests
     should not pass ``cores``. ``driver_memory=None`` → half of host RAM
-    (:func:`_default_driver_memory`).
+    (:func:`_default_driver_memory`). ``extra_conf`` overrides any conf,
+    except that ``spark.driver.extraJavaOptions`` is appended to
+    ``_DRIVER_JAVA_OPTIONS`` rather than replacing them.
     """
     cores_env = os.environ.get("SPARK_GRAFT_CPUS")
     if cores is None and cores_env:
         cores = int(cores_env)
     master = f"local[{cores}]" if cores else "local[*]"
     n_threads = cores or os.cpu_count() or 8
+    conf = dict(extra_conf or {})
+    java_options = _driver_java_options(conf.pop("spark.driver.extraJavaOptions", None))
     if shuffle_partitions is None:
         shuffle_partitions = n_threads
 
@@ -66,10 +104,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        .config("spark.driver.extraJavaOptions", java_options)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for key, value in (extra_conf or {}).items():
+    for key, value in conf.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -111,6 +149,13 @@ def small_state_aqe_bypass(
     (scripts/profile_partitions.py, warm JIT, median of 2): 32→8 partitions
     gives pagerank-to-1e-6 18.9→9.8 s, hits5 7.5→3.4 s, CC 11.7→4.2 s,
     BT-5 8.3→5.2 s.
+
+    Those figures are from ``local[32]``. On a 4-core host the opposite
+    was measured for AQE switched off for a whole ``perfbench``
+    ``transcripts`` run (traced, seed 42): ``pagerank.cpu_s`` 24→36,
+    ``triangles.cpu_s`` 9→33, ``suite.cpu_s`` 81→197, with more stages
+    and tasks. Re-measure this policy on 4 cores before moving it into
+    the engine's drivers; do not assume the ``local[32]`` result.
     """
     key = "spark.sql.adaptive.enabled"
     pkey = "spark.sql.shuffle.partitions"

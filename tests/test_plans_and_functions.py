@@ -189,3 +189,42 @@ def test_default_driver_memory_is_half_of_host_ram(tmp_path):
     meminfo.write_text("MemFree:  1000 kB\n")
     assert _default_driver_memory(str(meminfo)) == "1g"
     assert _default_driver_memory(str(tmp_path / "absent")) == "1g"
+
+
+def test_caller_java_options_append_to_the_driver_policy():
+    """A caller's ``spark.driver.extraJavaOptions`` goes after the engine's
+    options instead of replacing them, so its flags win (HotSpot takes the
+    last occurrence) and the others survive."""
+    from halvesting_geometric_spark.session import _driver_java_options
+
+    base = _driver_java_options()
+    assert base.split() == [
+        "-Djava.net.preferIPv4Stack=true",
+        "-XX:TieredStopAtLevel=1",
+        "-XX:+UseParallelGC",
+    ]
+    assert _driver_java_options("") == base
+    merged = _driver_java_options("-XX:TieredStopAtLevel=4 -Dx=1")
+    assert merged == base + " -XX:TieredStopAtLevel=4 -Dx=1"
+
+
+def test_driver_jvm_gets_the_policy_then_caller_options(spark):
+    """The options ``get_spark`` sets reach the JVM the session runs in,
+    with the fixture's own ``extraJavaOptions`` after the engine's, and the
+    last occurrence of each flag is the one in force."""
+    from conftest import LONG_LIVED_JVM_OPTIONS
+
+    jvm = spark._jvm
+    args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+                .getInputArguments())
+    expected = ["-XX:TieredStopAtLevel=1", "-XX:+UseParallelGC"]
+    expected += LONG_LIVED_JVM_OPTIONS.split()
+    positions = [args.index(flag) for flag in expected]
+    assert positions == sorted(positions)
+    hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    in_force = {name: hotspot.getVMOption(name).getValue()
+                for name in ("TieredStopAtLevel", "UseParallelGC", "UseG1GC")}
+    assert in_force == {"TieredStopAtLevel": "4", "UseParallelGC": "false",
+                        "UseG1GC": "true"}

@@ -45,7 +45,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from halvesting_geometric_spark.session import get_spark
 
-    spark = get_spark(app_name="check-oracles", driver_memory="8g")
+    spark = get_spark(app_name="check-oracles")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(

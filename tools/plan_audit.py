@@ -225,7 +225,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from halvesting_geometric_spark.session import get_spark
 
-    spark = get_spark(app_name="plan-audit", driver_memory="8g")
+    spark = get_spark(app_name="plan-audit")
     qs = entrymod.queries()
     print(f"# Physical-plan audit (ALL {len(qs)} gate queries)\n")
     print(
