@@ -12,6 +12,12 @@ Usage::
 Reads transcripts (parquet directory; Iceberg when the session has a catalog
 — same reader call with a table identifier), runs extraction + the selected
 algorithm, writes results + metrics, resumable from the checkpoint dir.
+
+Both ways take their session from ``session.get_spark``, the one policy that
+library callers, the tests and the bench also get: AQE on, Arrow on, shuffle
+partitions from the core count, the driver JVM's JIT/GC flags. Under
+spark-submit the launch's master, driver memory, JVM options and ``--conf``
+keys win over that policy (see ``session.py``).
 """
 
 from __future__ import annotations
@@ -20,8 +26,6 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
-
 from halvesting_geometric_spark.operators.components import connected_components
 from halvesting_geometric_spark.operators.graph import build_graph
 from halvesting_geometric_spark.operators.labelprop import label_propagation
@@ -29,6 +33,7 @@ from halvesting_geometric_spark.operators.pagerank import pagerank
 from halvesting_geometric_spark.operators.triangles import triangle_count
 from halvesting_geometric_spark.plans.checkpoint import CheckpointManager
 from halvesting_geometric_spark.schemas import TRANSCRIPTS_SCHEMA
+from halvesting_geometric_spark.session import get_spark
 
 ALGORITHMS = (
     "pagerank", "components", "labelprop", "triangles", "extract",
@@ -116,16 +121,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="dsir: hashed-feature bucket count")
     ap.add_argument("--target-role", default="assistant",
                     help="dsir: role whose turns form the target corpus")
-    ap.add_argument(
-        "--aqe-bypass",
-        action=argparse.BooleanOptionalAction,
-        default=True,
-        help="disable AQE while the algorithm runs IF the edge table is "
-        "small (<=1M rows, checked with a bounded limit-probe): AQE's "
-        "per-job re-planning is a fixed driver cost that dominates tiny "
-        "superstep loops (~13%% of the floor measured at 139k edges); at "
-        "scale the probe stops at the limit and AQE stays on",
-    )
     ap.add_argument("--exact-nf", action="store_true",
                     help="nf: exact frontier fixpoint instead of HyperBall")
     ap.add_argument("--delta-check-every", type=int, default=1,
@@ -134,13 +129,7 @@ def main(argv: list[str] | None = None) -> int:
                     "convergence on each batch's last step")
     args = ap.parse_args(argv)
 
-    # under spark-submit the session (master, executors) is externally owned,
-    # and the driver JVM starts before this runs: pass get_spark's JIT/GC
-    # policy with --driver-java-options "-XX:TieredStopAtLevel=1
-    # -XX:+UseParallelGC" (see session.py)
-    spark = SparkSession.builder.appName(
-        f"hgs-{args.algorithm}"
-    ).getOrCreate()
+    spark = get_spark(app_name=f"hgs-{args.algorithm}")
 
     if "/" in args.transcripts or args.transcripts.startswith("file:"):
         transcripts = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(args.transcripts)
@@ -153,22 +142,6 @@ def main(argv: list[str] | None = None) -> int:
         if args.checkpoint_dir
         else None
     )
-
-    from halvesting_geometric_spark.session import small_state_aqe_bypass
-
-    # bounded probe: limit(N+1).count() stops scanning at the limit, so a
-    # 10^12-row table pays one short partial scan, not a full count
-    _aqe_threshold = 1_000_000
-    _probe = (
-        g.edges.limit(_aqe_threshold + 1).count()
-        if args.aqe_bypass
-        else _aqe_threshold + 1
-    )
-    # manual enter/exit keeps the 17-branch dispatch un-indented; an
-    # exception mid-algorithm kills this spark-submit process (and its
-    # session) anyway, so the flipped conf cannot outlive the job
-    _aqe = small_state_aqe_bypass(spark, _probe, threshold=_aqe_threshold)
-    _aqe.__enter__()
 
     summary: dict = {"algorithm": args.algorithm}
     if args.algorithm == "extract":
@@ -560,9 +533,6 @@ def main(argv: list[str] | None = None) -> int:
         sup.write.mode("overwrite").parquet(args.output)
         summary["edges"] = sup.count()
     elif args.algorithm == "conductance":
-        from halvesting_geometric_spark.operators.labelprop import (
-            label_propagation,
-        )
         from halvesting_geometric_spark.operators.metrics import (
             community_conductance,
         )
@@ -864,7 +834,6 @@ def main(argv: list[str] | None = None) -> int:
             .count()
         )
         summary["edge_cut"] = int(cut)
-    _aqe.__exit__(None, None, None)
     print(json.dumps(summary))
     return 0
 

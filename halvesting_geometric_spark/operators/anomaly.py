@@ -167,8 +167,6 @@ def acf_counts(
     Returns one row per lag: ``(lag, r_e6, n_pairs)`` (``r_e6`` NULL
     for degenerate/zero-variance windows).
     """
-    from pyspark.sql import Window
-
     b = (
         events.select(
             F.floor(

@@ -235,7 +235,6 @@ def triangle_significance(edges: DataFrame) -> DataFrame:
     (triangles, s1, s2, expected_e6, ratio_e6); ratio is null for a
     degenerate graph (s1 == 0 or E[T] == 0).
     """
-    from halvesting_geometric_spark.operators.graph import canonical_edges
     from halvesting_geometric_spark.operators.triangles import triangle_count
 
     canon = canonical_edges(edges)

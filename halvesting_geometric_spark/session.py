@@ -1,11 +1,22 @@
-"""SparkSession factory.
+"""SparkSession factory: the one session policy of every entry point.
 
-Reference analog: the dask multiprocessing setup at
-``/root/reference/build_metadata.py:20,74`` (``NUM_PROC = physical cores``,
-``from_pandas(df, npartitions=NUM_PROC)``). Here parallelism is explicit and
-scale-ready: AQE on (runtime skew-join + partition coalescing), Arrow on (all
-Python-side kernels are vectorized batches), shuffle partitions sized to the
-local core count rather than the 200 default.
+Library callers, the tests, the bench (``perfbench/run.py``) and the
+spark-submit CLI (``cli.py``) all take their session from :func:`get_spark`,
+and no caller sets AQE or the partition count for itself. The policy: AQE
+on (runtime skew-join + partition coalescing) for every query, Arrow on
+(all Python-side kernels are vectorized batches), shuffle partitions sized
+to the core count rather than the 200 default, and the driver JVM policy
+below.
+
+The policy has two paths. Run as plain ``python``, :func:`get_spark` starts
+the driver JVM itself with every conf of the policy. Under spark-submit the
+JVM is already running when Python starts, so the launch's master, driver
+memory and JVM options stay, and any conf the launch carries (``--conf``,
+``spark-defaults.conf``) wins over the policy, the way ``extra_conf`` does;
+on a cluster the submitter passes ``--conf
+spark.sql.shuffle.partitions=<n>``. Measured through ``cli.py`` on 2,000
+conversations (13,854 edges, ``local[4]``), Spark's 200 default partitions
+made PageRank cost 624.5 CPU-s instead of 137.9.
 
 Driver JVM policy (``_DRIVER_JAVA_OPTIONS``): ``-XX:TieredStopAtLevel=1``
 keeps the JIT at C1 and never starts C2, and ``-XX:+UseParallelGC`` swaps
@@ -30,18 +41,30 @@ test session appends ``-XX:TieredStopAtLevel=4 -XX:-UseParallelGC
 -XX:+UseG1GC`` (``tests/conftest.py``). The options apply only when this
 call starts the JVM: under spark-submit pass them with
 ``--driver-java-options``.
+
+AQE stays on for every query. A caller-side switch that turned it off
+session-wide below 1M input rows was measured through ``cli.py`` on 4 cores
+(4 partitions, 3 alternating pairs, process-tree CPU-s, AQE off → on):
+PageRank 124.8 → 144.4, components 91.7 → 83.8, triangles 81.7 → 79.2.
+Input size does not separate the operator it helps from the ones it hurts,
+and AQE off for a whole ``perfbench`` ``transcripts`` run cost 2.3×
+``query_cpu_s``.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
-from contextlib import contextmanager
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 _DRIVER_JAVA_OPTIONS = (
     "-Djava.net.preferIPv4Stack=true -XX:TieredStopAtLevel=1 -XX:+UseParallelGC"
+)
+
+# Fixed when the driver JVM starts; under spark-submit it already has.
+_JVM_START_CONFS = frozenset(
+    {"spark.master", "spark.driver.memory", "spark.driver.extraJavaOptions"}
 )
 
 
@@ -67,116 +90,70 @@ def _driver_java_options(extra: str | None = None) -> str:
     return f"{_DRIVER_JAVA_OPTIONS} {extra}" if extra else _DRIVER_JAVA_OPTIONS
 
 
+def _launch_conf() -> SparkConf:
+    """The confs spark-submit started this process's driver JVM with: its
+    master, ``--conf`` flags, ``--driver-memory``, ``--driver-java-options``
+    and ``spark-defaults.conf``. Under spark-submit the JVM runs first and
+    hands Python its gateway through ``PYSPARK_GATEWAY_PORT``, so joining it
+    here starts nothing. Otherwise no launch exists, the JVM starts inside
+    ``getOrCreate`` with this module's confs, and the result is empty."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return SparkConf(loadDefaults=False)
+    SparkContext._ensure_initialized()
+    return SparkConf()
+
+
+def _session_conf(policy: dict[str, str], launch: SparkConf) -> dict[str, str]:
+    """The confs of ``policy`` that ``getOrCreate`` should set: all of them
+    when no launch exists. Under a launch, none that it already carries, so
+    the submitter's settings win, and none of ``_JVM_START_CONFS``, which
+    the running JVM can no longer take. spark-submit always sets
+    ``spark.master``, so that key tells a launch from an empty conf."""
+    launched = launch.contains("spark.master")
+    return {
+        key: value
+        for key, value in policy.items()
+        if not launch.contains(key) and not (launched and key in _JVM_START_CONFS)
+    }
+
+
 def get_spark(
     app_name: str = "halvesting_geometric_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a local SparkSession tuned for this engine.
+    """Build (or fetch) a SparkSession under this engine's session policy.
 
-    ``cores=None`` → ``local[*]``. On a real cluster the same confs apply;
-    only ``master`` changes (spark-submit owns it), so callers outside tests
-    should not pass ``cores``. ``driver_memory=None`` → half of host RAM
-    (:func:`_default_driver_memory`). ``extra_conf`` overrides any conf,
+    ``cores=None`` → ``SPARK_GRAFT_CPUS``, else ``local[*]``; shuffle
+    partitions follow the core count. ``driver_memory=None`` → half of host
+    RAM (:func:`_default_driver_memory`). ``extra_conf`` overrides any conf,
     except that ``spark.driver.extraJavaOptions`` is appended to
-    ``_DRIVER_JAVA_OPTIONS`` rather than replacing them.
+    ``_DRIVER_JAVA_OPTIONS`` rather than replacing them. Under spark-submit
+    the launch's confs win over all of these (:func:`_session_conf`).
     """
     cores_env = os.environ.get("SPARK_GRAFT_CPUS")
     if cores is None and cores_env:
         cores = int(cores_env)
-    master = f"local[{cores}]" if cores else "local[*]"
     n_threads = cores or os.cpu_count() or 8
-    conf = dict(extra_conf or {})
-    java_options = _driver_java_options(conf.pop("spark.driver.extraJavaOptions", None))
-    if shuffle_partitions is None:
-        shuffle_partitions = n_threads
-
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", driver_memory or _default_driver_memory())
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.extraJavaOptions", java_options)
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    )
-    for key, value in conf.items():
-        builder = builder.config(key, value)
-    spark = builder.getOrCreate()
+    extra = dict(extra_conf or {})
+    java_options = _driver_java_options(extra.pop("spark.driver.extraJavaOptions", None))
+    policy = {
+        "spark.master": f"local[{cores}]" if cores else "local[*]",
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(n_threads),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.driver.memory": driver_memory or _default_driver_memory(),
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.ui.enabled": "false",
+        "spark.driver.extraJavaOptions": java_options,
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        **extra,
+    }
+    conf = _session_conf(policy, _launch_conf())
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-@contextmanager
-def small_state_aqe_bypass(
-    spark: SparkSession,
-    n_rows: int,
-    threshold: int = 1_000_000,
-    rows_per_partition: int = 20_000,
-) -> Iterator[bool]:
-    """Temporarily disable AQE around an iterative driver whose loop state
-    is tiny, and shrink the static shuffle-partition count to match the
-    input size; yields whether the bypass engaged.
-
-    AQE re-plans every job from runtime shuffle statistics. On a superstep
-    loop over a small cached state that re-planning is a fixed per-job
-    driver cost: measured on the bench graph (139k edges, local[32]) the
-    10-superstep PageRank median drops from 0.772 to 0.671 s/superstep
-    (~13%) with AQE off. At real scale the re-plan amortizes to noise and
-    AQE's coalescing / skew-join handling is a clear win (the 20M-edge
-    scaling runs NEED the advisory-size coalescing), so the bypass only
-    engages when ``n_rows <= threshold`` and AQE was on; the previous
-    settings are always restored. The toggle is session-wide while active —
-    the engine's drivers run one job at a time by design, so don't wrap
-    concurrent queries.
-
-    With AQE off nothing coalesces the static ``spark.sql.shuffle.partitions``
-    (sized to the core count for the at-scale path), so every stage of a
-    tiny-state loop schedules one near-empty task per core. Partition count
-    should track data size, not core count (optimization guide §2.2): while
-    the bypass is engaged the partition count becomes
-    ``clamp(ceil(n_rows / rows_per_partition), 4, previous)`` — derived from
-    the input size, never raised above the configured value, and only inside
-    the same ≤``threshold`` window where AQE is off (at sf1.0 and above the
-    bypass disengages entirely). Measured at 139k edges / local[32]
-    (scripts/profile_partitions.py, warm JIT, median of 2): 32→8 partitions
-    gives pagerank-to-1e-6 18.9→9.8 s, hits5 7.5→3.4 s, CC 11.7→4.2 s,
-    BT-5 8.3→5.2 s.
-
-    Those figures are from ``local[32]``. On a 4-core host the opposite
-    was measured for AQE switched off for a whole ``perfbench``
-    ``transcripts`` run (traced, seed 42): ``pagerank.cpu_s`` 24→36,
-    ``triangles.cpu_s`` 9→33, ``suite.cpu_s`` 81→197, with more stages
-    and tasks. Re-measure this policy on 4 cores before moving it into
-    the engine's drivers; do not assume the ``local[32]`` result.
-    """
-    key = "spark.sql.adaptive.enabled"
-    pkey = "spark.sql.shuffle.partitions"
-    prev = str(spark.conf.get(key, "true"))
-    engage = n_rows <= threshold and prev.lower() == "true"
-    prev_parts: str | None = None
-    if engage:
-        spark.conf.set(key, "false")
-        try:
-            cur_parts = int(spark.conf.get(pkey, "200"))
-        except ValueError:
-            cur_parts = None
-        if cur_parts is not None:
-            sized = max(4, -(-int(n_rows) // rows_per_partition))
-            if sized < cur_parts:
-                prev_parts = str(cur_parts)
-                spark.conf.set(pkey, str(sized))
-    try:
-        yield engage
-    finally:
-        if engage:
-            spark.conf.set(key, prev)
-            if prev_parts is not None:
-                spark.conf.set(pkey, prev_parts)

@@ -4,6 +4,9 @@
 #   ./scripts/submit.sh pagerank --transcripts ... --output ... [--checkpoint-dir ...]
 #
 # MASTER defaults to local[*]; on a cluster export MASTER=yarn / spark://...
+# The CLI applies the engine's session policy itself (session.get_spark); a
+# --conf passed to spark-submit wins over it, e.g.
+# --conf spark.sql.shuffle.partitions=<n> on a cluster.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -14,7 +17,4 @@ zip -qr "$ZIP" halvesting_geometric_spark -x '*__pycache__*'
 exec spark-submit \
   --master "${MASTER:-local[*]}" \
   --py-files "$ZIP" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.adaptive.skewJoin.enabled=true \
-  --conf spark.sql.execution.arrow.pyspark.enabled=true \
   halvesting_geometric_spark/cli.py "$@"

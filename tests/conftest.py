@@ -15,7 +15,7 @@ LONG_LIVED_JVM_OPTIONS = "-XX:TieredStopAtLevel=4 -XX:-UseParallelGC -XX:+UseG1G
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(
-        app_name="hgs-tests", cores=4, shuffle_partitions=4,
+        app_name="hgs-tests", cores=4,
         extra_conf={"spark.driver.extraJavaOptions": LONG_LIVED_JVM_OPTIONS},
     )
     yield s

@@ -5,18 +5,28 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from halvesting_geometric_spark import cli
 from halvesting_geometric_spark.datagen import generate_transcripts
 
 
-def test_cli_pagerank_roundtrip(spark, tmp_path, capsys):
-    tr_dir = str(tmp_path / "tr")
-    generate_transcripts(spark, 40, seed=3).write.parquet(tr_dir)
+@pytest.fixture(scope="module")
+def transcripts_40(spark, tmp_path_factory):
+    tr_dir = str(tmp_path_factory.mktemp("tr40"))
+    generate_transcripts(spark, 40, seed=3).write.mode("overwrite").parquet(tr_dir)
+    return tr_dir
+
+
+@pytest.mark.parametrize(
+    "algo", ["pagerank", "components", "labelprop", "triangles"]
+)
+def test_cli_driver_roundtrip(spark, transcripts_40, tmp_path, capsys, algo):
     out_dir = str(tmp_path / "out")
     rc = cli.main(
         [
-            "pagerank",
-            "--transcripts", tr_dir,
+            algo,
+            "--transcripts", transcripts_40,
             "--output", out_dir,
             "--checkpoint-dir", str(tmp_path / "ck"),
             "--max-iter", "5",
@@ -24,10 +34,17 @@ def test_cli_pagerank_roundtrip(spark, tmp_path, capsys):
     )
     assert rc == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert summary["algorithm"] == "pagerank"
-    ranks = spark.read.parquet(out_dir)
-    assert ranks.count() > 0
-    assert abs(ranks.groupBy().sum("rank").first()[0] - 1.0) < 1e-6
+    assert summary["algorithm"] == algo
+    out = spark.read.parquet(out_dir)
+    assert out.count() > 0
+    if algo == "pagerank":
+        assert abs(out.groupBy().sum("rank").first()[0] - 1.0) < 1e-6
+    elif algo == "components":
+        assert summary["components"] > 0
+    elif algo == "labelprop":
+        assert summary["labels"] > 0
+    else:
+        assert summary["total"] >= 0
 
 
 def test_cli_extract_writes_graph(spark, tmp_path, capsys):

@@ -1,7 +1,7 @@
 """Layout invariance: a PageRank superstep computes the same ranks on a
 hash-by-src edge layout and a balanced_partition label-clustered layout
-(the scripts/scale_placement.py A/B) — placement changes bytes moved,
-never results."""
+(the A/B recorded in BENCH/raw/scale_placement_20m.json) — placement
+changes bytes moved, never results."""
 
 from __future__ import annotations
 

@@ -99,72 +99,6 @@ def test_year_from_timestamp(spark):
     assert (years == 2023).all()
 
 
-def test_small_state_aqe_bypass_toggles_and_restores(spark):
-    """Bypass engages only below threshold with AQE previously on, and
-    always restores the prior setting (including on exception)."""
-    import pytest
-
-    from halvesting_geometric_spark.session import small_state_aqe_bypass
-
-    key = "spark.sql.adaptive.enabled"
-    assert spark.conf.get(key) == "true"
-    with small_state_aqe_bypass(spark, 1000, threshold=10_000) as engaged:
-        assert engaged is True
-        assert spark.conf.get(key) == "false"
-    assert spark.conf.get(key) == "true"
-
-    # above threshold: no-op
-    with small_state_aqe_bypass(spark, 10**9, threshold=10_000) as engaged:
-        assert engaged is False
-        assert spark.conf.get(key) == "true"
-
-    # restores on exception
-    with pytest.raises(RuntimeError, match="boom"):
-        with small_state_aqe_bypass(spark, 1, threshold=10):
-            assert spark.conf.get(key) == "false"
-            raise RuntimeError("boom")
-    assert spark.conf.get(key) == "true"
-
-    # AQE already off: engage must not flip it back on afterwards
-    spark.conf.set(key, "false")
-    try:
-        with small_state_aqe_bypass(spark, 1, threshold=10) as engaged:
-            assert engaged is False
-            assert spark.conf.get(key) == "false"
-        assert spark.conf.get(key) == "false"
-    finally:
-        spark.conf.set(key, "true")
-
-
-def test_small_state_bypass_scales_shuffle_partitions(spark):
-    """While engaged, shuffle partitions shrink to ceil(n/rows_per_partition)
-    clamped to [4, previous]; the previous count is restored on exit and the
-    derivation never raises the configured value."""
-    from halvesting_geometric_spark.session import small_state_aqe_bypass
-
-    pkey = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(pkey)
-    try:
-        spark.conf.set(pkey, "32")
-        # 139k rows at 20k rows/partition -> 7
-        with small_state_aqe_bypass(spark, 139_000, threshold=1_000_000):
-            assert spark.conf.get(pkey) == "7"
-        assert spark.conf.get(pkey) == "32"
-        # tiny input clamps at the floor of 4
-        with small_state_aqe_bypass(spark, 10, threshold=1_000_000):
-            assert spark.conf.get(pkey) == "4"
-        assert spark.conf.get(pkey) == "32"
-        # big-but-under-threshold input never raises the configured count
-        with small_state_aqe_bypass(spark, 1_000_000, threshold=1_000_000):
-            assert spark.conf.get(pkey) == "32"
-        assert spark.conf.get(pkey) == "32"
-        # disengaged (above threshold): untouched
-        with small_state_aqe_bypass(spark, 10, threshold=5):
-            assert spark.conf.get(pkey) == "32"
-    finally:
-        spark.conf.set(pkey, prev)
-
-
 def test_json_long_field_null_on_malformed(spark):
     from halvesting_geometric_spark.functions import json_long_field
 
@@ -206,6 +140,35 @@ def test_caller_java_options_append_to_the_driver_policy():
     assert _driver_java_options("") == base
     merged = _driver_java_options("-XX:TieredStopAtLevel=4 -Dx=1")
     assert merged == base + " -XX:TieredStopAtLevel=4 -Dx=1"
+
+
+def test_launch_confs_win_over_the_session_policy(monkeypatch):
+    """Started from plain Python there is no launch and the whole policy
+    applies. Under spark-submit every key the launch carries wins, and the
+    confs fixed at JVM start are left to the launch even where it did not
+    set them."""
+    from pyspark import SparkConf
+
+    from halvesting_geometric_spark.session import _launch_conf, _session_conf
+
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    assert _launch_conf().getAll() == []
+    policy = {
+        "spark.master": "local[4]",
+        "spark.app.name": "hgs-pagerank",
+        "spark.driver.memory": "8g",
+        "spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=1",
+        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.adaptive.enabled": "true",
+    }
+    assert _session_conf(policy, SparkConf(loadDefaults=False)) == policy
+    launch = (
+        SparkConf(loadDefaults=False)
+        .setMaster("yarn")
+        .set("spark.app.name", "cli.py")
+        .set("spark.sql.shuffle.partitions", "400")
+    )
+    assert _session_conf(policy, launch) == {"spark.sql.adaptive.enabled": "true"}
 
 
 def test_driver_jvm_gets_the_policy_then_caller_options(spark):
