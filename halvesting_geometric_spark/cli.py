@@ -61,13 +61,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--tol", type=float, default=1e-6)
     ap.add_argument("--max-iter", type=int, default=100)
     ap.add_argument("--damping", type=float, default=0.85)
-    ap.add_argument(
-        "--scalable-ids",
-        action=argparse.BooleanOptionalAction,
-        default=True,
-        help="two-phase dense-id assignment (default); "
-        "--no-scalable-ids selects the single-window path",
-    )
     ap.add_argument("--seeds", type=int, nargs="+", default=[0],
                     help="ppr: teleport seed vertex ids")
     ap.add_argument("--iters", type=int, default=10,
@@ -136,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         transcripts = spark.read.table(args.transcripts)
 
-    g = build_graph(transcripts, scalable_ids=args.scalable_ids)
+    g = build_graph(transcripts, scalable_ids=True)
     ckpt = (
         CheckpointManager(spark, args.checkpoint_dir, args.algorithm)
         if args.checkpoint_dir

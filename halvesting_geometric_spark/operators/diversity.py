@@ -18,10 +18,10 @@ which the oracle gate verifies end to end).
 
 Scale: tokenization explodes once and aggregates to the VOCABULARY (state
 bounded by distinct terms, not tokens). Zipf's rank assignment sorts the
-vocabulary only — with ``scalable=True`` it uses the engine's two-phase
-range-partition pattern instead of a single-task window. Heaps' global
-token positions come from a two-phase prefix sum over per-document token
-counts (stats._with_prefix) — no global sort of the token stream.
+vocabulary only — with ``scalable=True`` it uses
+``plans.prefix.range_prefix`` instead of a single-task window. Heaps'
+global token positions come from the same module's prefix sum over
+per-document token counts — no global sort of the token stream.
 Compression ratio is a per-batch Arrow kernel (zlib is not expressible
 in Catalyst); everything else is pure DataFrame.
 """
@@ -33,7 +33,7 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from halvesting_geometric_spark.operators.stats import _with_prefix
+from halvesting_geometric_spark.plans.prefix import range_prefix
 
 E6 = 1_000_000
 E9 = 1_000_000_000
@@ -135,47 +135,21 @@ def zipf_slope(
     decimal(38,0) sums; slope and r^2 are one scalar double chain.
     Natural text lands near slope -1; templated corpora flatten.
 
-    ``scalable=True`` assigns ranks with the two-phase range-partition
-    pattern (per-partition counts collected, offsets broadcast) instead
-    of a single-task window over the vocabulary.
+    ``scalable=True`` assigns ranks with ``plans.prefix.range_prefix``
+    instead of a single-task window over the vocabulary.
 
     Returns one row ``(slope_e6, r2_e6, n_terms)``.
     """
     tc = _term_counts(docs, text_col)
+    order = [F.col("c").desc(), F.col("term").asc()]
     if not scalable:
-        w = Window.orderBy(F.col("c").desc(), F.col("term").asc())
-        ranked = tc.withColumn("rnk", F.row_number().over(w))
+        ranked = tc.withColumn(
+            "rnk", F.row_number().over(Window.orderBy(*order))
+        )
     else:
-        # eager checkpoint pins ONE boundary sampling for both consumers
-        # (totals + in-partition ranks) — see nullmodel._two_phase_rank
-        parts = (
-            tc.repartitionByRange(
-                num_partitions, F.col("c").desc(), F.col("term").asc()
-            )
-            .withColumn("_pid", F.spark_partition_id())
-            .localCheckpoint(eager=True)
-        )
-        # RangePartitioner assigns partition ids in the requested sort
-        # order, so _pid order IS (c DESC, term ASC) order
-        totals = parts.groupBy("_pid").agg(
-            F.count("*").alias("_cnt")
-        )
-        w_off = Window.orderBy(F.col("_pid")).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = totals.select(
-            "_pid",
-            F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off"),
-        )
-        w_in = Window.partitionBy("_pid").orderBy(
-            F.col("c").desc(), F.col("term").asc()
-        )
-        ranked = (
-            parts.withColumn("_loc", F.row_number().over(w_in))
-            .join(F.broadcast(offsets), "_pid")
-            .withColumn("rnk", F.col("_loc") + F.col("_off"))
-            .drop("_pid", "_loc", "_off")
-        )
+        ranked = range_prefix(
+            tc, order, rank_col="rnk", num_partitions=num_partitions
+        ).withColumn("rnk", F.col("rnk") + 1)
     q = ranked.select(
         F.floor(F.log(F.col("rnk").cast("double")) * E9 + F.lit(0.5))
         .cast("decimal(38,0)")
@@ -249,8 +223,8 @@ def heaps_checkpoints(
     tokens of the corpus in ``id_col`` order.
 
     The global position of each token is its document's exclusive
-    token-count prefix (two-phase via stats._with_prefix — no global
-    sort) plus its in-document offset; a term's first occurrence is the
+    token-count prefix (``plans.prefix.range_prefix`` — no global sort)
+    plus its in-document offset; a term's first occurrence is the
     MIN of its positions, and ``vocab(k)`` counts terms with first
     occurrence <= k. Exact integers end to end.
 
@@ -285,7 +259,9 @@ def heaps_checkpoints(
     counts = toks.select("_v", F.size("_t").alias("tc")).groupBy("_v").agg(
         F.sum("tc").alias("tc")
     )
-    pref = _with_prefix(counts, ("tc",), scalable=True).select(
+    pref = range_prefix(
+        counts, ["_v"], sums=("tc",), num_partitions=64
+    ).select(
         "_v", (F.col("cum_tc") - F.col("tc")).alias("_off")
     )
     pos = (

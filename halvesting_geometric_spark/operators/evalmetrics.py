@@ -27,6 +27,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from halvesting_geometric_spark.plans.prefix import range_prefix
+
 E6 = 1_000_000
 E9 = 1_000_000_000
 
@@ -301,65 +303,21 @@ def classification_report(
     return out
 
 
-def _avg_rank2(df: DataFrame, value_col: str, num_partitions: int | None = None) -> DataFrame:
-    """Doubled average ranks per distinct value of ``value_col``, exactly.
+def _avg_rank2(hist: DataFrame, value_col: str, cnt_col: str) -> DataFrame:
+    """Doubled average ranks per distinct value of a value histogram.
 
-    Returns ``(value_col, r2)`` where ``r2 = 2 * average ascending rank``
-    of rows holding that value (ties share the mean of their rank block:
+    ``hist`` holds one row per distinct ``value_col`` with its row count
+    ``cnt_col``; the result adds ``r2 = 2 * average ascending rank`` of the
+    rows holding that value (ties share the mean of their rank block:
     ``r2 = 2*cnt_less + cnt_eq + 1``) — doubled so the result is an exact
-    integer even when a tie block has even size.
-
-    At-scale path, same two-phase shape as ids.dense_ids_scalable: the
-    distinct-value table (already one groupBy smaller than the input) is
-    range-partitioned and sorted within partitions; per-partition count
-    SUMS (not row counts) are collected — ``num_partitions`` longs — and a
-    mapInPandas pass emits each value's exclusive prefix. No global sort,
-    no single-partition window.
+    integer even when a tie block has even size. ``cnt_less`` is the
+    exclusive count prefix from ``plans.prefix.range_prefix``: no global
+    sort, no single-partition window.
     """
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark import StorageLevel, TaskContext
-
-    spark = df.sparkSession
-    num_partitions = (
-        num_partitions or spark.sparkContext.defaultParallelism
-    )
-    counts = (
-        df.groupBy(value_col)
-        .agg(F.count("*").alias("cnt"))
-        .repartitionByRange(num_partitions, F.col(value_col).asc())
-        .sortWithinPartitions(F.col(value_col).asc())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    per_part = {
-        row["pid"]: row["s"]
-        for row in counts.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.sum("cnt").alias("s"))
-        .collect()
-    }
-    offsets: dict[int, int] = {}
-    running = 0
-    for pid in range(num_partitions):
-        offsets[pid] = running
-        running += per_part.get(pid, 0)
-    b_offsets = spark.sparkContext.broadcast(offsets)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        less = b_offsets.value.get(pid, 0)
-        for pdf in batches:
-            cnt = pdf["cnt"].to_numpy()
-            cum = cnt.cumsum()
-            r2 = 2 * (less + cum - cnt) + cnt + 1
-            out = pd.DataFrame(
-                {value_col: pdf[value_col].to_numpy(), "r2": r2.astype("int64")}
-            )
-            less += int(cum[-1]) if len(cnt) else 0
-            yield out
-
-    vtype = dict(counts.dtypes)[value_col]
-    return counts.mapInPandas(assign, schema=f"{value_col} {vtype}, r2 long")
+    return range_prefix(hist, [value_col], sums=(cnt_col,)).withColumn(
+        "r2",
+        (2 * F.col(f"cum_{cnt_col}") - F.col(cnt_col) + 1).cast("long"),
+    ).drop(f"cum_{cnt_col}")
 
 
 def spearman_correlation(
@@ -382,10 +340,9 @@ def spearman_correlation(
     identically (IEEE product of identical doubles).
 
     Scale: one item-key shuffle for the join, one groupBy per side for the
-    distinct-value count tables, the two-phase prefix pass of
-    :func:`_avg_rank2` (bounded ``num_partitions``-long collect), two
-    value-key joins to pull ranks back, then a single 1-row aggregation.
-    Nothing global-sorts the full input.
+    distinct-value count tables, the range prefix of :func:`_avg_rank2`,
+    two value-key joins to pull ranks back, then a single 1-row
+    aggregation. Nothing global-sorts the full input.
     """
     a = scores_a.select(
         F.col(item_col).alias("item"), F.col(value_col).alias("va")
@@ -397,8 +354,12 @@ def spearman_correlation(
     from pyspark import StorageLevel
 
     j = j.persist(StorageLevel.MEMORY_AND_DISK)
-    ra = _avg_rank2(j, "va").withColumnRenamed("r2", "r2a")
-    rb = _avg_rank2(j, "vb").withColumnRenamed("r2", "r2b")
+    ra = _avg_rank2(j.groupBy("va").count(), "va", "count").select(
+        "va", F.col("r2").alias("r2a")
+    )
+    rb = _avg_rank2(j.groupBy("vb").count(), "vb", "count").select(
+        "vb", F.col("r2").alias("r2b")
+    )
     ranked = j.join(ra, "va").join(rb, "vb")
     # Moments accumulate as decimal(38,0): still EXACT integers (the
     # double-cast happens once, after the sum), but overflow-safe far past

@@ -8,13 +8,10 @@ and *documents its own bug*: per-partition index reset collapses ids at scale
 - ``dense_ids_window``: ``row_number().over(Window.orderBy(key)) - 1``.
   Exact and simple; the global window is a single-task sort — fine for
   result-sized tables, wrong for billion-row vertex sets.
-- ``dense_ids_scalable``: the zipWithIndex pattern kept in DataFrame land —
-  range-repartition by key, sort within partitions, count rows per partition
-  (tiny collect), then add per-partition prefix offsets as a pure Catalyst
-  expression (``monotonically_increasing_id``'s low 33 bits are the
-  within-partition record index; offsets attach via a broadcast join).
-  Scales to any vertex count; the only driver traffic is one long per
-  partition, and no Python evaluation anywhere.
+- ``dense_ids_scalable``: the zipWithIndex pattern kept in DataFrame land,
+  via ``plans.prefix.range_prefix`` (pinned range partitions, in-plan
+  per-partition offsets, record index as the in-partition rank). Scales to
+  any vertex count, with no Python evaluation anywhere.
 
 Both produce ids equal to the rank of ``key`` in global ascending order, so
 they are interchangeable and cross-checked in tests.
@@ -24,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from halvesting_geometric_spark.plans.prefix import range_prefix
 
 
 def dense_ids_window(df: DataFrame, key: str, id_col: str = "vertex_id") -> DataFrame:
@@ -40,64 +39,15 @@ def dense_ids_scalable(
     id_col: str = "vertex_id",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Dense ids via two-phase per-partition counting (the at-scale path).
+    """Dense ids as the global rank of ``key`` (the at-scale path).
 
-    Phase 1 counts rows per range-partition (collects ``num_partitions``
-    longs); phase 2 assigns ``offset[pid] + within-partition index`` as a
-    pure Catalyst expression: ``monotonically_increasing_id`` stores the
-    record number within each partition in its low 33 bits (documented
-    layout), which over the sorted, pinned partitions IS the per-partition
-    cumcount, and the prefix offsets attach via a broadcast join on
-    ``spark_partition_id()``. No Python evaluation anywhere (the previous
-    mapInPandas kernel paid a full JVM→Arrow→Python round trip of the
-    vertex table — optimization guide §4).
-
-    The ranged input is CHECKPOINTED between phases so both see identical
-    partitioning: RangePartitioner samples boundaries with an RDD-id-seeded
-    RNG, and a cache-evicted-and-recomputed partition could silently
-    re-sample — localCheckpoint makes block loss FAIL the job instead of
-    producing wrong ids (fail-over-wrong for an id-assignment path).
+    ``plans.prefix.range_prefix`` ranks over ``num_partitions`` pinned range
+    partitions: per-partition offsets in-plan plus each row's record index,
+    no single-task window and no Python evaluation.
     """
-    spark = df.sparkSession
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    sorted_df = (
-        df.select(key)
-        .repartitionByRange(num_partitions, F.col(key).asc())
-        .sortWithinPartitions(F.col(key).asc())
-        .localCheckpoint(eager=True)
-    )
-    counts = {
-        row["pid"]: row["cnt"]
-        for row in sorted_df.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    if counts and max(counts.values()) >= (1 << 33):
-        # the 33-bit record field would wrap: 8.6e9 rows in ONE range
-        # partition means the partitioning itself is broken — fail fast
-        raise ValueError(
-            "dense_ids_scalable: a range partition exceeds 2^33 rows; "
-            "raise num_partitions"
-        )
-    offsets: list[tuple[int, int]] = []
-    running = 0
-    for pid in range(num_partitions):
-        offsets.append((pid, running))
-        running += counts.get(pid, 0)
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
-    # record index must be computed directly over the pinned partitions
-    # (BEFORE the join, whose output order is not load-bearing)
-    indexed = sorted_df.select(
-        F.spark_partition_id().alias("_pid"),
-        F.monotonically_increasing_id()
-        .bitwiseAND(F.lit((1 << 33) - 1))
-        .alias("_idx"),
-        F.col(key),
-    )
-    return indexed.join(F.broadcast(off_df), "_pid").select(
-        (F.col("_off") + F.col("_idx")).cast("long").alias(id_col),
-        F.col(key),
-    )
+    return range_prefix(
+        df.select(key), [key], rank_col=id_col, num_partitions=num_partitions
+    ).select(id_col, key)
 
 
 def build_vertices(

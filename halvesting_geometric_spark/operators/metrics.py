@@ -24,10 +24,12 @@ e6 fixed-point), so the DuckDB gate twins are bit-exact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from halvesting_geometric_spark.operators.evalmetrics import _avg_rank2
 from halvesting_geometric_spark.operators.graph import canonical_edges
+from halvesting_geometric_spark.plans.prefix import range_prefix
 
 
 def _e6(num: F.Column | str, den: F.Column | str) -> F.Column:
@@ -126,13 +128,9 @@ def auroc(
     ``scalable=False`` (default — validation scale) takes the prefix sum
     ``N_below`` with an unpartitioned window over DISTINCT scores: tiny
     state for discretized scores, a single-task sort otherwise.
-    ``scalable=True`` replaces the global window with the engine's
-    two-phase pattern (same shape as ids.dense_ids two-phase): hash scores
-    into ``buckets`` RANGE buckets via fixed-point quantization is wrong
-    for arbitrary floats, so phase 1 range-partitions distinct scores and
-    computes per-partition negative totals (driver sees ``buckets``-bounded
-    counts), phase 2 adds each partition's offset locally — no global
-    sort, no single-task window.
+    ``scalable=True`` replaces the global window with
+    ``plans.prefix.range_prefix`` over ``buckets`` range partitions of the
+    (group, score) axis — no global sort, no single-task window.
 
     Returns one row (group..., auroc double, n_pos, n_neg). Degenerate
     groups (no positives or no negatives) return NULL auroc.
@@ -146,8 +144,6 @@ def auroc(
             F.sum(1 - F.col("_y")).alias("n_s"),
         )
     )
-    from pyspark.sql import Window
-
     if not scalable:
         w = (
             Window.partitionBy(*group_cols)
@@ -158,38 +154,10 @@ def auroc(
             "n_below", F.coalesce(F.sum("n_s").over(w), F.lit(0))
         )
     else:
-        # two-phase prefix sum over range partitions of the score axis
-        # eager checkpoint pins ONE boundary sampling for both consumers
-        # (totals + in-partition prefix) — see nullmodel._two_phase_rank
-        parts = hist.repartitionByRange(buckets, *group_cols, F.col("_s"))
-        parts = parts.withColumn(
-            "_pid", F.spark_partition_id()
-        ).localCheckpoint(eager=True)
-        # per (group, partition) negative totals — bounded rows to shuffle
-        totals = (
-            parts.groupBy(*group_cols, "_pid")
-            .agg(F.sum("n_s").alias("_tn"), F.min("_s").alias("_lo"))
-        )
-        w_off = (
-            Window.partitionBy(*group_cols)
-            .orderBy("_lo", "_pid")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = totals.withColumn(
-            "_off", F.coalesce(F.sum("_tn").over(w_off), F.lit(0))
-        ).select(*group_cols, "_pid", "_off")
-        w_in = (
-            Window.partitionBy(*group_cols, "_pid")
-            .orderBy("_s")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        hist = (
-            parts.withColumn(
-                "_local", F.coalesce(F.sum("n_s").over(w_in), F.lit(0))
-            )
-            .join(offsets, [*group_cols, "_pid"])
-            .withColumn("n_below", F.col("_local") + F.col("_off"))
-        )
+        hist = range_prefix(
+            hist, ["_s"], sums=("n_s",), groups=group_cols,
+            num_partitions=buckets,
+        ).withColumn("n_below", F.col("cum_n_s") - F.col("n_s"))
     # decimal accumulators: p_s·n_below can exceed 2^63 at extreme scale
     # and ANSI mode would throw on a long sum; decimal(38,0) stays exact
     out = hist.groupBy(*group_cols).agg(
@@ -412,23 +380,20 @@ def gini_coefficient(
     Uses the sorted-rank identity ``G = (2 * sum_i i*x_i) / (n * sum x)
     - (n + 1) / n`` — tie-order-invariant because a tie block's
     position sum equals ``count * midrank``, so the engine's exact
-    doubled-midrank machinery (evalmetrics._avg_rank2, two-phase, no
-    global sort) gives ``2 * sum_i i*x_i = sum_v c_v * x_v * r2_v``
-    exactly, as decimal(38,0) integer arithmetic. One scalar double
-    chain at the end.
+    doubled-midrank machinery (evalmetrics._avg_rank2 over the one value
+    histogram, no global sort) gives ``2 * sum_i i*x_i = sum_v c_v * x_v
+    * r2_v`` exactly, as decimal(38,0) integer arithmetic. One scalar
+    double chain at the end.
 
     Returns one row ``(gini_e6, n, total)``.
     """
-    from halvesting_geometric_spark.operators.evalmetrics import (
-        _avg_rank2,
+    hist = (
+        values.select(F.col(value_col).cast("long").alias("_x"))
+        .filter(F.col("_x") >= 0)
+        .groupBy("_x")
+        .agg(F.count("*").cast("long").alias("c"))
     )
-
-    base = values.select(
-        F.col(value_col).cast("long").alias("_x")
-    ).filter(F.col("_x") >= 0)
-    hist = base.groupBy("_x").agg(F.count("*").cast("long").alias("c"))
-    r2 = _avg_rank2(base, "_x")
-    j = hist.join(r2, "_x")
+    j = _avg_rank2(hist, "_x", "c")
     agg = j.agg(
         F.sum(
             F.col("c").cast("decimal(38,0)")

@@ -21,10 +21,11 @@ every kept row bit-for-bit (same reason the edge-split gate is exact).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from halvesting_geometric_spark.functions import portable_hash64
+from halvesting_geometric_spark.plans.prefix import range_prefix
 
 _PPM = 1_000_000
 
@@ -162,12 +163,10 @@ def pack_sequences(
     sum(len_in_bin) per bin == bin_size.
 
     ``scalable=False`` (validation scale) takes the prefix sum with one
-    unpartitioned window — a single-task sort. ``scalable=True`` is the
-    engine's two-phase pattern (same shape as auroc/dense_ids):
-    range-partition on the id, per-partition token totals (``buckets``
-    bounded rows) get windowed for partition offsets, each row adds its
-    partition-local prefix — no global sort, no single-task window, and
-    the output is IDENTICAL (range partitions are contiguous in id).
+    unpartitioned window — a single-task sort. ``scalable=True`` takes it
+    with ``plans.prefix.range_prefix`` over ``buckets`` range partitions
+    of the id — no global sort, no single-task window, and the output is
+    IDENTICAL.
     """
     if bin_size < 1:
         raise ValueError(f"bin_size must be >= 1, got {bin_size}")
@@ -175,8 +174,6 @@ def pack_sequences(
     base = docs.filter(F.length(F.trim(F.col(text_col))) > 0).select(
         F.col(id_col).alias("_id"), n_tok.alias("_n")
     )
-    from pyspark.sql import Window
-
     if not scalable:
         w = Window.orderBy("_id").rowsBetween(
             Window.unboundedPreceding, -1
@@ -185,32 +182,9 @@ def pack_sequences(
             "_s", F.coalesce(F.sum("_n").over(w), F.lit(0))
         )
     else:
-        # eager checkpoint pins ONE boundary sampling for both consumers
-        # (totals + in-partition prefix) — see nullmodel._two_phase_rank
-        parts = (
-            base.repartitionByRange(buckets, "_id")
-            .withColumn("_pid", F.spark_partition_id())
-            .localCheckpoint(eager=True)
-        )
-        totals = parts.groupBy("_pid").agg(
-            F.sum("_n").alias("_tn"), F.min("_id").alias("_lo")
-        )
-        w_off = Window.orderBy("_lo", "_pid").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = totals.withColumn(
-            "_off", F.coalesce(F.sum("_tn").over(w_off), F.lit(0))
-        ).select("_pid", "_off")
-        w_in = Window.partitionBy("_pid").orderBy("_id").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        pref = (
-            parts.withColumn(
-                "_local", F.coalesce(F.sum("_n").over(w_in), F.lit(0))
-            )
-            .join(F.broadcast(offsets), "_pid")
-            .withColumn("_s", F.col("_local") + F.col("_off"))
-        )
+        pref = range_prefix(
+            base, ["_id"], sums=("_n",), num_partitions=buckets
+        ).withColumn("_s", F.col("cum__n") - F.col("_n"))
     L = F.lit(int(bin_size)).cast("long")
     spans = pref.select(
         "_id",

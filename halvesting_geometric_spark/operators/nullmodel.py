@@ -29,12 +29,12 @@ bucketing trick at
 ``/root/reference/halvesting_geometric/models/modeling_link_prediction.py:115``
 is the closest analog of the hash-derived determinism used here.
 
-Ranking never uses a single-task global window: ranks come from the
-repo's two-phase pattern (range-repartition on the sort key, per-partition
-``row_number``, broadcast per-partition offsets — ``repartitionByRange``
-partition ids are already in sort order).  With ``hash_method="portable"``
-the permutation is bit-reproducible in any engine (the correctness gate's
-DuckDB twin replays it with ``ROW_NUMBER() OVER (ORDER BY ...)``).
+Ranking never uses a single-task global window: ranks come from
+``plans.prefix.range_prefix`` (pinned range partitions, per-partition
+offsets in-plan, record index as the in-partition rank).  With
+``hash_method="portable"`` the permutation is bit-reproducible in any
+engine (the correctness gate's DuckDB twin replays it with
+``ROW_NUMBER() OVER (ORDER BY ...)``).
 """
 
 from __future__ import annotations
@@ -43,43 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from halvesting_geometric_spark.operators.sampling import hash64
-
-
-def _two_phase_rank(
-    df: DataFrame, order_cols: list[str], num_partitions: int
-) -> DataFrame:
-    """Add a dense 1-based ``rank`` by ``order_cols`` (must be a total
-    order) without a global single-task window.
-
-    The ranged partitioning is FROZEN with an eager localCheckpoint before
-    fan-out: RangePartitioner samples its boundaries with an RDD-id-seeded
-    RNG, so the two lazy consumers (per-partition counts → offsets, and
-    the per-partition row_number) can otherwise see DIFFERENT boundaries
-    when the exchange is re-evaluated — measured at 20M rows as ±0.5%
-    duplicate/missing ranks, while small inputs pass by luck. Checkpointing
-    pins one materialization that both branches read.
-    """
-    parts = (
-        df.repartitionByRange(
-            num_partitions, *[F.col(c).asc() for c in order_cols]
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    counts = parts.groupBy("_pid").agg(F.count("*").alias("_n"))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid", F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_off")
-    )
-    w_in = Window.partitionBy("_pid").orderBy(
-        *[F.col(c).asc() for c in order_cols]
-    )
-    return (
-        parts.withColumn("_rn", F.row_number().over(w_in))
-        .join(F.broadcast(offsets), "_pid")
-        .withColumn("rank", (F.col("_off") + F.col("_rn")).cast("long"))
-        .drop("_pid", "_rn", "_off")
-    )
+from halvesting_geometric_spark.plans.prefix import range_prefix
 
 
 def configuration_model(
@@ -99,19 +63,21 @@ def configuration_model(
     e = edges.select("src", "dst").withColumn(
         "occ", F.row_number().over(occ_w).cast("long")
     )
-    s_stubs = _two_phase_rank(
+    s_stubs = range_prefix(
         e.withColumn(
             "_h", hash64(hash_method, "src", "dst", "occ", seed=seed * 2)
         ).select(F.col("src").alias("v"), "_h", "src", "dst", "occ"),
         ["_h", "src", "dst", "occ"],
-        num_partitions,
+        rank_col="rank",
+        num_partitions=num_partitions,
     ).select(F.col("v").alias("new_src"), "rank")
-    d_stubs = _two_phase_rank(
+    d_stubs = range_prefix(
         e.withColumn(
             "_h", hash64(hash_method, "src", "dst", "occ", seed=seed * 2 + 1)
         ).select(F.col("dst").alias("v"), "_h", "src", "dst", "occ"),
         ["_h", "src", "dst", "occ"],
-        num_partitions,
+        rank_col="rank",
+        num_partitions=num_partitions,
     ).select(F.col("v").alias("new_dst"), "rank")
     return s_stubs.join(d_stubs, "rank").select(
         F.col("new_src").alias("src"), F.col("new_dst").alias("dst")

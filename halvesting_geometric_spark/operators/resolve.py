@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from halvesting_geometric_spark.operators.sampling import hash64
+from halvesting_geometric_spark.plans.prefix import range_prefix
 
 
 def normalize_key(col: Column | str) -> Column:
@@ -111,55 +112,18 @@ def sorted_neighborhood_pairs(
     block. Output: (a, b) id pairs with rank(a) < rank(b), so each pair
     appears once.
 
-    Scale shape: the global rank uses the same two-phase per-partition
-    counting path as ``dense_ids_scalable`` (no single-task global window),
-    over a composite ``key<TAB>zero-padded-id`` string whose lexicographic order
-    equals the (key, id) order; the id rides inside the composite's
-    fixed-width (20-char, full int64 range) tail, so it is re-extracted
-    after ranking instead of shuffle-joined back. The within-window
-    self-join is banded on ``rank DIV window`` — every row joins at most
-    two bands, so the pair join shuffles O(n) rows regardless of n and
-    never goes quadratic.
+    Scale shape: the global rank over (key, id) comes from
+    ``plans.prefix.range_prefix`` (no single-task global window). The
+    within-window self-join is banded on ``rank DIV window`` — every row
+    joins at most two bands, so the pair join shuffles O(n) rows regardless
+    of n and never goes quadratic.
     """
-    from halvesting_geometric_spark.operators.ids import dense_ids_scalable
-
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    id_type = df.schema[id_col].dataType
-    if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
-        raise ValueError(
-            f"id_col must be an integral type, got {id_type.simpleString()} "
-            "(ids are recovered from the composite key's numeric tail)"
-        )
     key = normalize_key(key_col) if normalize else F.col(key_col).cast("string")
-    id_str = F.col(id_col).cast("string")
-    # pad-width guard inlined into the composite (lpad silently TRUNCATES
-    # overlong inputs, which would corrupt the extracted id); 20 chars
-    # covers the full non-negative int64 range
-    padded = F.when(
-        (F.col(id_col) >= 0) & (F.length(id_str) <= 20),
-        F.lpad(id_str, 20, "0"),
-    ).otherwise(
-        F.raise_error(
-            F.lit("sorted_neighborhood_pairs: id must be non-negative "
-                  "and at most 20 chars wide")
-        )
-    )
-    # Tab separator (0x09) sorts below the whole normalized alphabet
-    # (letters/digits/space after normalize_key), so when one key is a
-    # proper prefix of another the shorter key still ranks first — i.e.
-    # composite order == (key, id) order. With normalize=False and raw keys
-    # containing control chars < 0x09, order degrades to composite-string
-    # order.
-    composite = F.concat_ws("\t", key, padded)
-    keyed = df.select(composite.alias("_sk")).dropDuplicates(["_sk"])
-    ranked = dense_ids_scalable(
-        keyed, "_sk", id_col="_rank", num_partitions=num_partitions
-    ).select(
-        F.substring("_sk", -20, 20).cast(id_type).alias("_id"),
-        "_rank",
+    keyed = df.select(key.alias("_k"), F.col(id_col).alias("_id")).distinct()
+    ranked = range_prefix(
+        keyed, ["_k", "_id"], rank_col="_rank", num_partitions=num_partitions
     )
     lo = ranked.select(
         F.col("_id").alias("a"),

@@ -22,8 +22,7 @@ precedent.
 Scale: every test aggregates a per-distinct-value histogram (one shuffle,
 state bounded by value cardinality, never row count). Prefix sums over
 the value axis use an unpartitioned window over DISTINCT values at
-validation scale and the engine's two-phase range-partition pattern
-(same shape as metrics.auroc ``scalable=True``) when ``scalable=True``.
+validation scale and ``plans.prefix.range_prefix`` when ``scalable=True``.
 Chi-square's cell grid is |A|x|B| with the smaller margin broadcast.
 """
 
@@ -31,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from halvesting_geometric_spark.plans.prefix import range_prefix
 
 E6 = 1_000_000
 
@@ -68,14 +69,13 @@ def _with_prefix(
     scalable: bool,
     num_partitions: int = 64,
 ) -> DataFrame:
-    """Inclusive prefix sums of ``cols`` over ``_v`` ascending.
+    """Inclusive prefix sums ``cum_<c>`` of ``cols`` over ``_v`` ascending.
 
     ``scalable=False``: one unpartitioned window over DISTINCT values —
     fine while value cardinality is modest (the histogram is already one
-    groupBy smaller than the input). ``scalable=True``: range-partition
-    the value axis, collect ``num_partitions`` per-partition totals,
-    broadcast the exclusive offsets back — no single-task window (same
-    two-phase shape as metrics.auroc / evalmetrics._avg_rank2).
+    groupBy smaller than the input). ``scalable=True``:
+    ``plans.prefix.range_prefix`` over ``num_partitions`` range partitions
+    of the value axis — no single-task window.
     """
     if not scalable:
         w = Window.orderBy("_v").rowsBetween(
@@ -84,44 +84,7 @@ def _with_prefix(
         for c in cols:
             hist = hist.withColumn(f"cum_{c}", F.sum(c).over(w))
         return hist
-    # freeze the ranged partitioning before fan-out: RangePartitioner
-    # samples boundaries with an RDD-id-seeded RNG, so the totals branch
-    # and the in-partition window could otherwise see different _pid
-    # assignments if the exchange re-evaluates (see nullmodel._two_phase_rank)
-    parts = hist.repartitionByRange(num_partitions, F.col("_v").asc())
-    parts = parts.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        eager=True
-    )
-    totals = parts.groupBy("_pid").agg(
-        F.min("_v").alias("_lo"),
-        *[F.sum(c).alias(f"_t_{c}") for c in cols],
-    )
-    w_off = Window.orderBy("_lo", "_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        "_pid",
-        *[
-            F.coalesce(F.sum(f"_t_{c}").over(w_off), F.lit(0)).alias(
-                f"_off_{c}"
-            )
-            for c in cols
-        ],
-    )
-    w_in = Window.partitionBy("_pid").orderBy("_v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    out = parts
-    for c in cols:
-        out = out.withColumn(f"_loc_{c}", F.sum(c).over(w_in))
-    out = out.join(F.broadcast(offsets), "_pid")
-    for c in cols:
-        out = out.withColumn(
-            f"cum_{c}", F.col(f"_loc_{c}") + F.col(f"_off_{c}")
-        )
-    return out.drop(
-        "_pid", *[f"_loc_{c}" for c in cols], *[f"_off_{c}" for c in cols]
-    )
+    return range_prefix(hist, ["_v"], sums=cols, num_partitions=num_partitions)
 
 
 def two_sample_ks(

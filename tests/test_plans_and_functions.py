@@ -52,6 +52,25 @@ def test_extraction_plan_is_pure_jvm(spark):
     assert "regexp_extract_all" in plan  # codegen'd JVM extraction
 
 
+def test_spearman_ranks_without_a_pandas_pass(spark):
+    """The midrank prefix behind spearman/gini is in-plan integer
+    arithmetic: no Arrow round trip of the ranked value table."""
+    from halvesting_geometric_spark.operators.evalmetrics import (
+        spearman_correlation,
+    )
+
+    a = spark.createDataFrame(
+        [(str(i), i % 7) for i in range(30)], "item string, value long"
+    )
+    b = spark.createDataFrame(
+        [(str(i), i % 5) for i in range(30)], "item string, value long"
+    )
+    res = spearman_correlation(a, b)
+    plan = _physical(res)
+    assert "MapInPandas" not in plan and "MapInArrow" not in plan
+    assert res.first()["n_items"] == 30
+
+
 def test_small_dimension_join_broadcasts(spark, tmp_path):
     """Vertex-map joins on a small vertex table must plan as broadcast
     (reference J1 analog: ~20-row domains table)."""

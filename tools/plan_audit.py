@@ -30,7 +30,6 @@ sys.path.insert(0, "/root/repo")
 #   ivf       = IVF Arrow matmul assignment + probe kernels
 #   emb       = embeddings Arrow moments / projection kernel
 #   skyline   = skyline.py per-partition sorted-scan frontier kernel
-#   rank-prefix = evalmetrics._avg_rank2 two-phase midrank prefix kernel
 KERNELS = {
     # Round 4: the shared pipeline tables (and skyline2/conductance8 results)
     # are localCheckpointed, so the dense-id / per-op Arrow kernels no longer
@@ -43,12 +42,6 @@ KERNELS = {
     # offset join) — the former "dense-id" mapInPandas kernel rows
     # (snm_pairs, hetero_edges, hetero_vertices) are Python-free now.
     "sage2": "sage",
-    # spearman_deg: the two _avg_rank2 prefix-offset passes (one per rank
-    # side) — same two-phase mapInPandas shape as the dense-id kernel
-    "spearman_deg": "rank-prefix",
-    # gini_indeg: one _avg_rank2 prefix-offset pass (doubled midranks of
-    # the in-degree histogram) — same rank-prefix kernel as spearman_deg
-    "gini_indeg": "rank-prefix",
     # robustness3 consumes its CC runs EAGERLY while building (per-cap
     # stats collects) and returns a local relation — Python-free plan
     "media_meta": "media",
@@ -187,35 +180,48 @@ UNPART_WINDOW_BOUNDED: dict[str, str] = {
     "ppr_nibble": "sweep-cut prefix over the ε-truncated PPR support of "
         "the seed set (localcluster.py:92) — local-cluster-sized by the "
         "ACL nibble guarantee, not graph-sized",
-    "ks_qty": "two-phase prefix: the global window is over the "
-        "per-partition boundary table (stats.py:99, _pid rows = shuffle "
-        "partition count), in-partition prefix is partitioned",
+    "ks_qty": "range prefix: the global window is over the "
+        "per-partition totals (plans/prefix.py, one row per range "
+        "partition), the in-partition prefix is partitioned",
     "acf24": "lead()/moment windows over the densified HOURLY bucket "
         "axis (anomaly.py acf_counts) — one row per hour bucket per lag",
     "wq_price": "cumulative weight over DISTINCT price-cent values "
         "(quantiles.py weighted type-1 path) — value-domain bounded",
-    "zipf_fit": "two-phase rank: global window over the per-partition "
-        "boundary table only (diversity.py:163, _pid rows); the "
-        "rank-within-partition window is partitioned",
-    "heaps5": "two-phase prefix over per-document token counts; the "
-        "global window is the per-partition boundary table "
-        "(diversity.py heaps path), checkpoints are a 5-row grid",
+    "zipf_fit": "range rank: global window over the per-partition "
+        "totals only (plans/prefix.py, one row per range partition); the "
+        "in-partition rank is the record index, no window",
+    "heaps5": "range prefix over per-document token counts; the "
+        "global window is over the per-partition totals "
+        "(plans/prefix.py), checkpoints are a 5-row grid",
     "mwu_price": "doubled-midrank prefix over DISTINCT integer cent "
         "values (stats.py) — value-domain bounded",
     "best_of_n": "per-prompt windows are partitioned (preference.py:497); "
         "the one global window ranks the k-row prompt summary for "
         "deterministic output ordering",
-    "pack1k": "two-phase prefix-sum: global window over the "
-        "per-partition boundary table (mixing.py:198, _pid rows)",
-    "configmodel": "two-phase stub ranks: both global windows are over "
-        "the per-partition boundary tables (nullmodel.py:70), one per "
-        "stub side",
+    "pack1k": "range prefix-sum: global window over the "
+        "per-partition totals (plans/prefix.py, one row per range "
+        "partition)",
+    "configmodel": "range stub ranks: both global windows are over "
+        "the per-partition totals (plans/prefix.py), one per stub side",
     "anomalies": "type-1 median/MAD passes over DISTINCT values per "
         "type (anomaly.py:126 partitioned; the global window is the "
         "distinct-value bucket axis at anomaly.py:196)",
-    "auroc_events": "ungrouped AUROC: the rank-prefix windows fall back "
-        "to unpartitioned over the per-SCORE histogram "
-        "(metrics.py:153 — one row per distinct score, not per event)",
+    "auroc_events": "ungrouped AUROC: the offsets window of the range "
+        "prefix is unpartitioned over the per-partition totals "
+        "(plans/prefix.py, one row per range partition)",
+    "spearman_deg": "midrank prefix of each rank side: the offsets "
+        "window is over the per-partition totals (plans/prefix.py, one "
+        "row per range partition)",
+    "gini_indeg": "midrank prefix of the in-degree histogram: the offsets "
+        "window is over the per-partition totals (plans/prefix.py)",
+    "snm_pairs": "range rank over (key, id): the offsets window is over "
+        "the per-partition totals (plans/prefix.py), read by both band "
+        "sides",
+    "hetero_vertices": "dense ids: the offsets window is over the "
+        "per-partition totals (plans/prefix.py, one row per range "
+        "partition)",
+    "hetero_edges": "dense ids, read by both endpoint joins: the offsets "
+        "window is over the per-partition totals (plans/prefix.py)",
 }
 
 
