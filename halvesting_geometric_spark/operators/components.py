@@ -17,7 +17,6 @@ the canonicalized edge set — O(E) with no driver-side edge materialization.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
@@ -25,6 +24,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from halvesting_geometric_spark.plans.checkpoint import CheckpointManager
+from halvesting_geometric_spark.plans.superstep import (
+    resume_point,
+    run_supersteps,
+)
 
 
 @dataclass
@@ -83,13 +86,16 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.filter(F.col("src") != F.col("dst")).dropDuplicates(["src", "dst"])
 
 
-def _signature(edges: DataFrame) -> tuple[int, int]:
+def _signature(edges: DataFrame) -> dict:
     row = edges.select(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
     ).dropDuplicates(["a", "b"]).agg(
         F.count("*").alias("cnt"), F.bit_xor(F.xxhash64("a", "b")).alias("sig")
     ).first()
-    return int(row["cnt"]), int(row["sig"] if row["sig"] is not None else 0)
+    return {
+        "edges": int(row["cnt"]),
+        "signature": int(row["sig"] if row["sig"] is not None else 0),
+    }
 
 
 def connected_components(
@@ -104,87 +110,59 @@ def connected_components(
     ``vertices`` (optional, ``vertex_id`` column): isolated vertices become
     their own singleton components.
     """
-    spark = edges.sparkSession
-    # canonical (src<dst) initial form: both directions of a pair collapse
-    # to one row, so the symmetrized large-star view is duplicate-free and
-    # the round works on the minimal edge set. Star-contraction only
-    # depends on the undirected edge SET, so results are unchanged.
-    cur = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-        .dropDuplicates(["src", "dst"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    start_round = 0
-    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-        start_round = checkpoint.latest_iteration() + 1
-        cur = checkpoint.load_state(start_round - 1).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    prev_sig = _signature(cur)
-    rounds = start_round
-    all_metrics: list[dict] = []
-    prev_cache: DataFrame | None = cur
-    for rounds in range(start_round, max_rounds):
-        t0 = time.monotonic()
-        nxt_raw = _small_star(_large_star(cur)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        row = {"iteration": rounds}
-        if checkpoint is not None:
-            nxt = checkpoint.save_state(rounds, nxt_raw, metrics=row)
-            sig = _signature(nxt)
-            nxt_raw.unpersist()
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = None
-        else:
-            # ONE job per round: the signature aggregate materializes the
-            # round's cache; lineage truncates through a LAZY localCheckpoint
-            # that computes inside the NEXT round's job, so the previous
-            # round's cache is the one released here (see pagerank.py)
-            sig = _signature(nxt_raw)
-            nxt = nxt_raw.localCheckpoint(eager=False)
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = nxt_raw
-        row.update(
-            {"edges": sig[0], "signature": sig[1],
-             "wall_sec": time.monotonic() - t0}
-        )
-        all_metrics.append(row)
-        cur = nxt
-        if sig == prev_sig:
-            rounds += 1
-            break
-        prev_sig = sig
-    else:
-        rounds = max_rounds
-
-    # At the fixpoint the edge set is a union of stars (v → component min).
-    sym = cur.unionByName(
-        cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    comp = sym.groupBy("src").agg(F.min("dst").alias("nbr_min")).select(
-        F.col("src").alias("vertex_id"),
-        F.least(F.col("nbr_min"), F.col("src")).alias("component"),
-    )
-    if vertices is not None:
-        comp = (
-            vertices.select("vertex_id")
-            .join(comp, "vertex_id", "left")
+    start, cur = resume_point(checkpoint, resume)
+    if cur is None:
+        # canonical (src<dst) initial form: both directions of a pair
+        # collapse to one row, so the symmetrized large-star view is
+        # duplicate-free and the round works on the minimal edge set.
+        # Star-contraction only depends on the undirected edge SET, so
+        # results are unchanged.
+        cur = (
+            edges.filter(F.col("src") != F.col("dst"))
             .select(
-                "vertex_id",
-                F.coalesce("component", F.col("vertex_id")).alias("component"),
+                F.least("src", "dst").alias("src"),
+                F.greatest("src", "dst").alias("dst"),
             )
+            .dropDuplicates(["src", "dst"])
         )
-    comp = comp.persist(StorageLevel.MEMORY_AND_DISK)
-    n_comp = comp.select("component").distinct().count()
-    if prev_cache is not None:
-        prev_cache.unpersist()
+    cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
+
+    def finish(cur: DataFrame) -> tuple[DataFrame, int]:
+        # At the fixpoint the edge set is a union of stars (v → component min).
+        sym = cur.unionByName(
+            cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        comp = sym.groupBy("src").agg(F.min("dst").alias("nbr_min")).select(
+            F.col("src").alias("vertex_id"),
+            F.least(F.col("nbr_min"), F.col("src")).alias("component"),
+        )
+        if vertices is not None:
+            comp = (
+                vertices.select("vertex_id")
+                .join(comp, "vertex_id", "left")
+                .select(
+                    "vertex_id",
+                    F.coalesce("component", F.col("vertex_id")).alias("component"),
+                )
+            )
+        comp = comp.persist(StorageLevel.MEMORY_AND_DISK)
+        return comp, comp.select("component").distinct().count()
+
+    run = run_supersteps(
+        cur,
+        lambda edges, _carried: _small_star(_large_star(edges)),
+        _signature,
+        finish,
+        done=lambda sig, prev_sig: sig == prev_sig,
+        steps=max_rounds,
+        start=start,
+        observed=_signature(cur),
+        checkpoint=checkpoint,
+    )
+    comp, n_comp = run.result
     return ComponentsResult(
-        components=comp, rounds=rounds, num_components=n_comp, metrics=all_metrics
+        components=comp,
+        rounds=run.iterations,
+        num_components=n_comp,
+        metrics=run.metrics,
     )

@@ -14,7 +14,6 @@ an aggregate plus a ranking window.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
@@ -22,6 +21,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from halvesting_geometric_spark.plans.checkpoint import CheckpointManager
+from halvesting_geometric_spark.plans.superstep import (
+    resume_point,
+    run_supersteps,
+)
 
 # vertex count up to which the label table broadcasts into the gather join
 _BROADCAST_STATE_THRESHOLD = 1_000_000
@@ -50,16 +53,9 @@ def label_propagation(
     Initial label = vertex_id. Isolated vertices keep their own label.
     Stops when no label changes (or after exactly ``fixed_iters`` steps).
 
-    ``sync_every``: supersteps batched into one Spark job (1-8) — the
-    pagerank ``delta_check_every`` lever. Intermediate states are lazy
-    localCheckpoints (consumers share one RDD inside the batch job); the
-    changed-count — and therefore convergence — is observed only on each
-    batch's last step, so tol-style convergence can overshoot by up to
-    k−1 supersteps. Forced to 1 when a checkpoint manager is attached.
+    ``sync_every``: supersteps batched into one Spark job, with the
+    checkpoint, resume and convergence rules of ``plans/superstep.py``.
     """
-    if not 1 <= sync_every <= 8:
-        raise ValueError(f"sync_every must be in [1, 8], got {sync_every}")
-    spark = edges.sparkSession
     if vertices is None:
         vertices = (
             edges.select(F.col("src").alias("vertex_id"))
@@ -77,11 +73,8 @@ def label_propagation(
     )
     sym.count()
 
-    start_iter = 0
-    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-        start_iter = checkpoint.latest_iteration() + 1
-        labels = checkpoint.load_state(start_iter - 1)
-    else:
+    start, labels = resume_point(checkpoint, resume)
+    if labels is None:
         labels = vertices.select(
             "vertex_id", F.col("vertex_id").alias("label")
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -95,7 +88,7 @@ def label_propagation(
     def _b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast else df
 
-    def _step(state_df: DataFrame) -> DataFrame:
+    def _step(state_df: DataFrame, _carried: dict | None) -> DataFrame:
         """One lazy superstep: (vertex_id, old_label, label)."""
         nbr_labels = sym.join(
             _b(state_df.select(
@@ -120,72 +113,32 @@ def label_propagation(
             )
         )
 
-    target = fixed_iters if fixed_iters is not None else max_iter
-    batch = sync_every if checkpoint is None else 1
-    converged = False
-    all_metrics: list[dict] = []
-    prev_paired: DataFrame | None = None
-    it = start_iter
-    while it < target:
-        t0 = time.monotonic()
-        k_eff = min(batch, target - it)
-        # intermediate steps chain lazily; each is a LAZY localCheckpoint so
-        # its two consumers (neighbor gather + pairing) share one RDD
-        # materialized inside the batch's single counting job
-        state_df = labels
-        for _ in range(k_eff - 1):
-            state_df = (
-                _step(state_df)
-                .select("vertex_id", "label")
-                .localCheckpoint(eager=False)
-            )
-        # one action per batch: materialize (old, new) pairs + changed count
-        paired = _step(state_df).persist(StorageLevel.MEMORY_AND_DISK)
-        changed = paired.filter(F.col("label") != F.col("old_label")).count()
-        it += k_eff
-        row = {
-            "iteration": it - 1,
-            "batched_steps": k_eff,
-            "changed": changed,
-            "wall_sec": time.monotonic() - t0,
-        }
-        all_metrics.append(row)
-        # truncate lineage every iteration (see pagerank.py — the state is
-        # referenced twice per superstep, so deferred truncation is exponential)
-        state = paired.select("vertex_id", "label")
-        if checkpoint is not None:
-            labels = checkpoint.save_state(it - 1, state, metrics=row)
-            if prev_paired is not None:
-                prev_paired.unpersist()
-            paired.unpersist()
-            prev_paired = None
-        else:
-            # LAZY truncation = ONE Spark job per superstep (the `changed`
-            # count): the checkpoint RDD materializes inside the next
-            # iteration's job from this iteration's cached pair table, so the
-            # PREVIOUS pair cache is the one released here (see pagerank.py)
-            labels = state.localCheckpoint(eager=False)
-            if prev_paired is not None:
-                prev_paired.unpersist()
-            prev_paired = paired
-        if fixed_iters is None and changed == 0:
-            converged = True
-            break
-    else:  # while exhausted without a convergence break: it == target
-        converged = fixed_iters is not None
+    def observe(pair: DataFrame) -> dict:
+        return {"changed": pair.filter(F.col("label") != F.col("old_label")).count()}
 
-    labels = labels.persist(StorageLevel.MEMORY_AND_DISK)
-    n_labels = labels.select("label").distinct().count()
-    if prev_paired is not None:
-        prev_paired.unpersist()
-    sym.unpersist()
-    vertices.unpersist()
+    def finish(state: DataFrame) -> tuple[DataFrame, int]:
+        labels = state.persist(StorageLevel.MEMORY_AND_DISK)
+        return labels, labels.select("label").distinct().count()
+
+    try:
+        run = run_supersteps(
+            labels, _step, observe, finish,
+            done=lambda obs, _: fixed_iters is None and obs["changed"] == 0,
+            steps=fixed_iters if fixed_iters is not None else max_iter,
+            start=start,
+            batch=sync_every,
+            checkpoint=checkpoint,
+        )
+    finally:
+        sym.unpersist()
+        vertices.unpersist()
+    labels, n_labels = run.result
     return LabelPropResult(
         labels=labels,
-        iterations=it,
-        converged=converged,
+        iterations=run.iterations,
+        converged=run.converged or fixed_iters is not None,
         num_labels=n_labels,
-        metrics=all_metrics,
+        metrics=run.metrics,
     )
 
 

@@ -28,7 +28,6 @@ BASELINE.json north_star).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
@@ -36,6 +35,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from halvesting_geometric_spark.plans.checkpoint import CheckpointManager
+from halvesting_geometric_spark.plans.superstep import (
+    resume_point,
+    run_supersteps,
+)
 
 
 @dataclass
@@ -56,7 +59,6 @@ def pagerank(
     max_iter: int = 100,
     fixed_iters: int | None = None,
     checkpoint: CheckpointManager | None = None,
-    checkpoint_interval: int = 1,
     resume: bool = False,
     weight_col: str | None = None,
     initial_ranks: DataFrame | None = None,
@@ -84,28 +86,14 @@ def pagerank(
     ``vertices`` are silently dropped and total rank mass leaks below 1
     (``build_vertices`` guarantees the superset).
 
-    ``delta_check_every``: supersteps batched into ONE Spark job (1-8). The
-    per-job driver floor (scheduling + AQE replanning, measured ~0.5s at
-    bench scale) is paid once per batch instead of once per iteration.
-    Intermediate steps keep exact semantics by computing the dangling mass
-    as an in-plan 1-row broadcast aggregate instead of the carried driver
-    scalar; the scatter shuffles shared by a step's two consumers dedupe
-    via ReusedExchange inside the job. The L1 delta is observed only on the
-    batch's LAST step, so tol-convergence can overshoot by up to k−1
-    supersteps (all counted in ``iterations``); final ranks are the same
-    fixpoint. Forced to 1 when a checkpoint manager is attached (per-
-    iteration durability is the point of checkpointing).
+    ``delta_check_every``: supersteps batched into one Spark job, with the
+    checkpoint, resume and convergence rules of ``plans/superstep.py``;
+    a checkpoint saves (vertex_id, rank, out_deg) every superstep.
     """
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
     if tol <= 0:
         raise ValueError(f"tol must be positive, got {tol}")
-    if fixed_iters is not None and fixed_iters < 0:
-        raise ValueError(f"fixed_iters must be >= 0, got {fixed_iters}")
-    if not 1 <= delta_check_every <= 8:
-        raise ValueError(
-            f"delta_check_every must be in [1, 8], got {delta_check_every}"
-        )
     spark = edges.sparkSession
     if vertices is None:
         vertices = (
@@ -188,18 +176,10 @@ def pagerank(
     )
     m = contrib_edges.count()  # materialize the loop-invariant once
 
-    start_iter = 0
-    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-        start_iter = checkpoint.latest_iteration() + 1
-        # saved state is (vertex_id, rank); re-attach the loop-invariant
-        # out_deg from the cached vertex table
-        ranks = checkpoint.load_state(start_iter - 1).join(vertices, "vertex_id")
-        dangling = float(
-            ranks.filter(F.col("out_deg") == 0)
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .first()[0]
-        )
-    elif initial_ranks is not None:
+    start, ranks = resume_point(checkpoint, resume)
+    # a resumed state's dangling mass is aggregated in-plan by its first step
+    dangling = None
+    if ranks is None and initial_ranks is not None:
         base0 = vertices.join(
             initial_ranks.select(
                 F.col("vertex_id").cast(idt).alias("vertex_id"),
@@ -217,26 +197,19 @@ def pagerank(
             ).alias("dang"),
         ).first()
         total = float(st0["total"] or 0.0)
-        if total <= 0.0:
-            ranks = vertices.select(
-                "vertex_id",
-                (F.lit(1.0) / F.lit(float(n))).alias("rank"),
-                "out_deg",
-            )
-            dangling = n_dangling / float(n)
-        else:
+        if total > 0.0:
             ranks = base0.select(
                 "vertex_id", (F.col("_r0") / total).alias("rank"), "out_deg"
             ).localCheckpoint(eager=False)
             dangling = float(st0["dang"] or 0.0) / total
-    else:
+    if ranks is None:
         # a lazy projection of the cached vertex table — no extra job/cache
         ranks = vertices.select(
             "vertex_id", (F.lit(1.0) / F.lit(float(n))).alias("rank"), "out_deg"
         )
         dangling = n_dangling / float(n)
 
-    # Vertex-state join strategy: _advance hints both state joins
+    # Vertex-state join strategy: step hints both state joins
     # shuffle_hash at EVERY scale. The cached edge table is pre-partitioned
     # on the gather key, so a shuffle join moves only the V-row state, while
     # a broadcast build serializes V rows through the driver once per
@@ -248,16 +221,16 @@ def pagerank(
     # keeps the state side a parallel shuffled build against the cached,
     # pre-partitioned edge table (no sort, no edge re-shuffle).
 
-    def _advance(state_df: DataFrame, dang_scalar: float | None):
+    def step(state_df: DataFrame, carried: dict | None) -> DataFrame:
         """One lazy superstep over ``state_df`` (vertex_id, rank, out_deg).
 
-        Returns (joined, rank_expr): ``joined`` pairs the previous state
-        with the scatter sums (old_rank and out_deg ride along) and
-        ``rank_expr`` computes the new rank over it. ``dang_scalar`` is the
-        carried driver value for the batch's first step; None switches the
-        dangling mass to an in-plan 1-row broadcast aggregate of
-        ``state_df`` so intermediate steps stay inside one job with exact
-        semantics.
+        Returns the pair table (vertex_id, old_rank, out_deg, rank). The
+        dangling mass is ``carried``'s, the driver scalar observed on the
+        previous superstep (analytically Σ rank = 1 every iteration; fp
+        drift O(1e-16·iters) ≪ tol); without one it is an in-plan 1-row
+        broadcast aggregate of ``state_df``, so a batch's intermediate steps
+        stay inside one job with exact semantics, and the scatter shuffles
+        shared by a step's two consumers dedupe via ReusedExchange.
         """
         # per-VERTEX divide: each edge row then just carries the precomputed
         # contribution through the gather join (no per-edge arithmetic)
@@ -287,8 +260,10 @@ def pagerank(
             "vertex_id",
             "left",
         )
-        if dang_scalar is not None:
-            base = F.lit((1.0 - damping) / n + damping * dang_scalar / n)
+        if carried is not None:
+            base = F.lit(
+                (1.0 - damping) / n + damping * carried["dangling"] / n
+            )
         else:
             dang_df = state_df.agg(
                 F.coalesce(
@@ -308,115 +283,55 @@ def pagerank(
         rank_expr = (
             base + F.lit(damping) * F.coalesce(F.col("msg_sum"), F.lit(0.0))
         ).alias("rank")
-        return joined, rank_expr
+        return joined.select("vertex_id", "old_rank", "out_deg", rank_expr)
 
-    target = fixed_iters if fixed_iters is not None else max_iter
-    batch = delta_check_every if checkpoint is None else 1
-    converged = False
-    all_metrics: list[dict] = []
-    prev_paired: DataFrame | None = None
-    it = start_iter
-    while it < target:
-        t0 = time.monotonic()
-        k_eff = min(batch, target - it)
-        # ONE Spark job per BATCH of supersteps: intermediate steps chain
-        # lazily (dangling via in-plan aggregates, shared scatter shuffles
-        # deduped by ReusedExchange); the final step's pair table is cached,
-        # and one aggregate over it yields the convergence delta (L1/L∞ of
-        # the LAST step) AND the next batch's dangling mass. The first
-        # step's dangling mass is the driver scalar carried from the
-        # previous aggregate (analytically Σ rank = 1 every iteration; fp
-        # drift O(1e-16·iters) ≪ tol).
-        state_df = ranks
-        for j in range(k_eff - 1):
-            joined_j, expr_j = _advance(state_df, dangling if j == 0 else None)
-            # lazy localCheckpoint: the three consumers of each intermediate
-            # state (gather, dangling aggregate, next pairing) share ONE RDD
-            # materialized inside the batch job — without it the plan tree
-            # grows 3^k and the batch runs each step's join up to 3× (k=6
-            # measured 3.5× SLOWER than k=1; with RDD sharing it scales)
-            state_df = joined_j.select(
-                "vertex_id", expr_j, "out_deg"
-            ).localCheckpoint(eager=False)
-        paired, rank_expr = _advance(
-            state_df, dangling if k_eff == 1 else None
-        )
-        paired = paired.persist(StorageLevel.MEMORY_AND_DISK)
-        _d = F.abs(rank_expr.cast("double") - F.col("old_rank"))
-        agg = paired.agg(
+    def observe(pair: DataFrame) -> dict:
+        """One aggregate: the convergence delta (L1/L∞) AND the next
+        superstep's dangling mass."""
+        _d = F.abs(F.col("rank") - F.col("old_rank"))
+        agg = pair.agg(
             F.sum(_d).alias("l1"),
             F.max(_d).alias("linf"),
             F.sum(
-                F.when(F.col("out_deg") == 0, rank_expr).otherwise(F.lit(0.0))
-            ).alias("next_dangling"),
+                F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(F.lit(0.0))
+            ).alias("dangling"),
         ).first()
-        delta_l1 = float(agg["l1"])
-        delta_linf = float(agg["linf"])
-        dangling = float(agg["next_dangling"] or 0.0)
-        state = paired.select("vertex_id", rank_expr, "out_deg")
-        it += k_eff
-        # superstep wall excludes the (optional) checkpoint write below, and
-        # the saved metrics row carries it — same contract as round 1
-        wall = time.monotonic() - t0
-        row = {
-            "iteration": it - 1,
-            "batched_steps": k_eff,
-            "delta_l1": delta_l1,
-            "delta_linf": delta_linf,
-            "wall_sec": wall,
+        return {
+            "delta_l1": float(agg["l1"]),
+            "delta_linf": float(agg["linf"]),
+            "dangling": float(agg["dangling"] or 0.0),
         }
 
-        if checkpoint is not None and (
-            (it - 1) % checkpoint_interval == 0 or it == target
-        ):
-            ranks = checkpoint.save_state(
-                it - 1,
-                state.select("vertex_id", "rank"),
-                metrics=row,
-            ).join(vertices, "vertex_id")  # re-attach loop-invariant out_deg
-            if prev_paired is not None:
-                prev_paired.unpersist()
-            paired.unpersist()
-            prev_paired = None
-        else:
-            # Lineage MUST truncate every iteration (the state is referenced
-            # twice per superstep, so an un-truncated logical plan doubles per
-            # iteration). The LAZY localCheckpoint truncates the plan with NO
-            # extra job: it materializes inside the next iteration's single
-            # job as a cheap map over this iteration's cached pair table. That
-            # cache must outlive the materialization, so unpersist the
-            # PREVIOUS pair table (just consumed by this aggregate) instead.
-            ranks = state.localCheckpoint(eager=False)
-            if prev_paired is not None:
-                prev_paired.unpersist()
-            prev_paired = paired
-        all_metrics.append(row)
-
-        if fixed_iters is None and delta_l1 < tol:
-            converged = True
-            break
-    else:  # while exhausted without tol-break: it == target already
-        converged = fixed_iters is not None
-
-    # materialize the (possibly lazy-checkpointed) final state BEFORE
-    # dropping the caches it reads from — one job total, not one per superstep.
     # Compacted int ids are widened back so the API schema is input-stable.
     out_id = (
         F.col("vertex_id").cast("long").alias("vertex_id")
         if compact and _vid_type == "bigint"
         else F.col("vertex_id")
     )
-    ranks = ranks.select(out_id, "rank")
-    ranks.count()
-    if prev_paired is not None:
-        prev_paired.unpersist()
-    contrib_edges.unpersist()
-    vertices.unpersist()
+
+    def finish(state: DataFrame) -> DataFrame:
+        ranks = state.select(out_id, "rank")
+        ranks.count()
+        return ranks
+
+    try:
+        run = run_supersteps(
+            ranks, step, observe, finish,
+            done=lambda obs, _: fixed_iters is None and obs["delta_l1"] < tol,
+            steps=fixed_iters if fixed_iters is not None else max_iter,
+            start=start,
+            batch=delta_check_every,
+            observed=None if dangling is None else {"dangling": dangling},
+            checkpoint=checkpoint,
+        )
+    finally:
+        contrib_edges.unpersist()
+        vertices.unpersist()
     return PageRankResult(
-        ranks=ranks,
-        iterations=it,
-        converged=converged,
+        ranks=run.result,
+        iterations=run.iterations,
+        converged=run.converged or fixed_iters is not None,
         num_vertices=n,
         num_edges=m,
-        metrics=all_metrics,
+        metrics=run.metrics,
     )

@@ -11,11 +11,14 @@ to the frontier's edge boundary.
 
 from __future__ import annotations
 
-import time as _time
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from halvesting_geometric_spark.plans.superstep import (
+    resume_point,
+    run_supersteps,
+)
 
 
 def bfs_levels(
@@ -304,7 +307,6 @@ def sssp(
     fixed_iters: int = 10,
     directed: bool = True,
     checkpoint=None,
-    checkpoint_interval: int = 1,
     resume: bool = False,
     sync_every: int = 1,
 ) -> DataFrame:
@@ -321,27 +323,14 @@ def sssp(
     superstep's min); ``weight_col=None`` means unit weights (= BFS
     distances, cross-checkable against :func:`bfs_levels`).
 
-    ``checkpoint``: a ``plans.checkpoint.CheckpointManager`` — each
-    ``checkpoint_interval``-th relaxation persists (vertex_id, dist) with
-    metrics + per-partition lineage; ``resume=True`` continues from the
-    latest saved relaxation (the remaining superstep count shrinks
-    accordingly — relaxation k is idempotent given state k−1).
+    ``checkpoint``/``resume``/``sync_every``: a checkpoint manager saves
+    (vertex_id, dist) every relaxation, and relaxations batch into one
+    Spark job, by the rules of ``plans/superstep.py``. A batch's early exit
+    is sound because with w ≥ 0 a zero-improvement round is a fixpoint.
 
     Returns (vertex_id, dist) for every vertex reached within
     ``fixed_iters`` hops; unreached vertices are absent.
-
-    ``sync_every``: relaxations batched into one Spark job (1-8, the
-    pagerank ``delta_check_every`` lever): intermediate distance tables
-    are lazy localCheckpoints (shared RDDs inside the batch job) and the
-    improvement count is observed only on each batch's last relaxation —
-    sound for the early exit because with w ≥ 0 a zero-improvement round
-    is a fixpoint (improvements can never resume after one). Forced to 1
-    when a checkpoint manager is attached.
     """
-    if fixed_iters < 0:
-        raise ValueError(f"fixed_iters must be >= 0, got {fixed_iters}")
-    if not 1 <= sync_every <= 8:
-        raise ValueError(f"sync_every must be in [1, 8], got {sync_every}")
     spark = edges.sparkSession
     if isinstance(sources, (list, tuple)):
         sources = spark.createDataFrame(
@@ -367,22 +356,18 @@ def sssp(
     if neg is not None and neg < 0:
         raise ValueError(f"negative edge weight {neg}; sssp requires w >= 0")
 
-    start_iter = 1
-    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-        last = checkpoint.latest_iteration()
-        start_iter = last + 1
-        dist = checkpoint.load_state(last).persist(StorageLevel.MEMORY_AND_DISK)
-    else:
+    start, dist = resume_point(checkpoint, resume)
+    if dist is None:
         dist = (
             sources.select("vertex_id")
             .distinct()
             .join(vertices.select("vertex_id"), "vertex_id", "left_semi")
             .select("vertex_id", F.lit(0.0).alias("dist"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
+    dist = dist.persist(StorageLevel.MEMORY_AND_DISK)
     if dist.count() == 0:
         raise ValueError("source set is empty (or disjoint from vertices)")
-    def _relax(state_df: DataFrame) -> DataFrame:
+    def _relax(state_df: DataFrame, _carried: dict | None) -> DataFrame:
         """One lazy relaxation: (vertex_id, dist, _improved)."""
         relaxed = (
             topo.join(
@@ -407,50 +392,20 @@ def sssp(
             ).alias("_improved"),
         )
 
-    batch = sync_every if checkpoint is None else 1
-    prev_caches: list[DataFrame] = [dist]
-    it = start_iter - 1  # relaxations completed so far
-    while it < fixed_iters:
-        t0 = _time.monotonic()
-        k_eff = min(batch, fixed_iters - it)
-        # intermediate relaxations chain lazily; each state is a LAZY
-        # localCheckpoint so its two consumers (relax join + pairing)
-        # share one RDD materialized inside the batch's counting job
-        state_df = dist
-        for _ in range(k_eff - 1):
-            state_df = (
-                _relax(state_df)
-                .select("vertex_id", "dist")
-                .localCheckpoint(eager=False)
-            )
-        paired = _relax(state_df).persist(StorageLevel.MEMORY_AND_DISK)
-        n_improved = paired.filter(F.col("_improved")).count()
-        it += k_eff
-        nxt = paired.select("vertex_id", "dist").localCheckpoint(eager=False)
-        if checkpoint is not None and (
-            it % checkpoint_interval == 0
-            or it == fixed_iters
-            or n_improved == 0
-        ):
-            nxt = checkpoint.save_state(
-                it,
-                nxt,
-                metrics={
-                    "n_improved": n_improved,
-                    "wall_sec": _time.monotonic() - t0,
-                },
-            )
-        for p in prev_caches:
-            p.unpersist()
-        prev_caches = [paired]
-        dist = nxt
-        if n_improved == 0:
-            break
-    out = dist.select("vertex_id", "dist").localCheckpoint(eager=True)
-    for p in prev_caches:
-        p.unpersist()
-    topo.unpersist()
-    return out
+    try:
+        return run_supersteps(
+            dist,
+            _relax,
+            lambda pair: {"n_improved": pair.filter(F.col("_improved")).count()},
+            lambda state: state.localCheckpoint(eager=True),
+            done=lambda obs, _: obs["n_improved"] == 0,
+            steps=fixed_iters,
+            start=start,
+            batch=sync_every,
+            checkpoint=checkpoint,
+        ).result
+    finally:
+        topo.unpersist()
 
 
 def double_sweep_diameter(
