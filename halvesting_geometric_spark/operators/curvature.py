@@ -14,11 +14,11 @@ where ``t(u, v)`` is the number of triangles through the edge and the
 degrees are undirected simple-graph degrees.  Everything is integral, so
 the operator is exactly reproducible across engines — no float anywhere.
 
-Scale shape: one degree-oriented wedge join for the per-edge support
-(:func:`halvesting_geometric_spark.operators.ktruss.edge_support`,
-O(√E)-bounded work per edge, no adjacency buffering) plus two hash joins
-against the degree table.  The per-vertex scalar curvature is one further
-explode + hash aggregate.  No window over unbounded groups, no driver
+Scale shape: one support pass (``ktruss._support``: the degree-oriented
+wedge join, O(√E)-bounded work per edge, no adjacency buffering) gives
+each edge its support and both endpoint degrees, so no degree table is
+joined.  The per-vertex scalar curvature is one further explode + hash
+aggregate.  No window over unbounded groups, no driver
 state; every shuffle keys on a vertex or canonical-edge id.
 
 The reference (see
@@ -32,18 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from halvesting_geometric_spark.operators.graph import canonical_edges
 from halvesting_geometric_spark.operators.ktruss import _support
-
-
-def _undirected_degrees(canon: DataFrame) -> DataFrame:
-    """(v, deg) over the simple undirected graph of canonical edges."""
-    return (
-        canon.select(F.col("src").alias("v"))
-        .unionByName(canon.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-    )
 
 
 def forman_curvature(edges: DataFrame) -> DataFrame:
@@ -58,29 +47,15 @@ def forman_curvature(edges: DataFrame) -> DataFrame:
     most negative edges are the classic cut candidates for
     community-aware partitioning.
     """
-    # one canonicalization shuffle, shared by the support join and the
-    # degree aggregate (edge_support would re-canonicalize internally)
-    canon = canonical_edges(edges).localCheckpoint(eager=True)
-    deg = _undirected_degrees(canon)
-    sup = _support(canon)
-    return (
-        sup.join(deg.select(F.col("v").alias("src"), F.col("deg").alias("deg_src")), "src")
-        .join(deg.select(F.col("v").alias("dst"), F.col("deg").alias("deg_dst")), "dst")
-        .select(
-            "src",
-            "dst",
-            "support",
-            F.col("deg_src").cast("long").alias("deg_src"),
-            F.col("deg_dst").cast("long").alias("deg_dst"),
-            (
-                F.lit(4)
-                - F.col("deg_src")
-                - F.col("deg_dst")
-                + F.lit(3) * F.col("support")
-            )
-            .cast("long")
-            .alias("curvature"),
-        )
+    return _support(edges).select(
+        "src",
+        "dst",
+        "support",
+        "deg_src",
+        "deg_dst",
+        (F.lit(4) - F.col("deg_src") - F.col("deg_dst") + F.lit(3) * F.col("support"))
+        .cast("long")
+        .alias("curvature"),
     )
 
 

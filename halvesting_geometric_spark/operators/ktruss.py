@@ -31,45 +31,47 @@ from halvesting_geometric_spark.operators.triangles import (
 )
 
 
-def _support(canon: DataFrame) -> DataFrame:
-    """(src, dst, support) per canonical edge; zero-support edges included.
+def _support(edges: DataFrame) -> DataFrame:
+    """(src, dst, support, deg_src, deg_dst) per canonical edge of ``edges``;
+    zero-support edges included, degrees over the simple undirected graph.
 
-    Builds the oriented table itself and materializes the result eagerly so
-    the per-round cache can be released — the peeling loop would otherwise
-    leak one cached table per round.
+    One pass over one persisted oriented table (:func:`_oriented`, which
+    canonicalizes ``edges`` and carries both endpoint degrees): list the
+    triangles, credit each one's three oriented edges with one explode, and
+    left-join the counts back. The result is pinned eagerly so the oriented
+    table can be released: the peeling loop would otherwise leak one cached
+    table per round.
     """
-    o = _oriented(canon).persist(StorageLevel.MEMORY_AND_DISK)
-    # the triangle table feeds THREE union branches below; persist it so the
-    # wedge join runs once, not once per branch (measured 10.7 -> ~4 s for
-    # the support pass at bench scale; at any scale it is a 3x saving on the
-    # dominant join)
-    tri = triangle_listing(canon, oriented=o).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # the lister orients by (degree, id), so (a, b, c) is NOT id-sorted;
-    # normalize each of the triangle's three edges with least/greatest
+    o = _oriented(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    # the lister emits a->b, a->c and the closing b->c, all in o's orientation
+    tri = triangle_listing(edges, oriented=o)
     hits = (
-        tri.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(tri.select(F.col("a").alias("src"), F.col("c").alias("dst")))
-        .unionByName(tri.select(F.col("b").alias("src"), F.col("c").alias("dst")))
-        .select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
+        tri.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("a"), F.col("b")),
+                    F.struct(F.col("a"), F.col("c").alias("b")),
+                    F.struct(F.col("b").alias("a"), F.col("c").alias("b")),
+                )
+            ).alias("e")
         )
-        .groupBy("src", "dst")
+        .select("e.*")
+        .groupBy("a", "b")
         .agg(F.count("*").alias("support"))
     )
+    fwd = F.col("a") < F.col("b")
     out = (
-        canon.join(hits, ["src", "dst"], "left")
+        o.join(hits, ["a", "b"], "left")
         .select(
-            "src",
-            "dst",
+            F.least("a", "b").alias("src"),
+            F.greatest("a", "b").alias("dst"),
             F.coalesce("support", F.lit(0)).cast("long").alias("support"),
+            F.when(fwd, F.col("da")).otherwise(F.col("db")).alias("deg_src"),
+            F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("deg_dst"),
         )
         .localCheckpoint(eager=True)
     )
     o.unpersist()
-    tri.unpersist()
     return out
 
 
@@ -83,7 +85,7 @@ def edge_support(edges: DataFrame) -> DataFrame:
     Same degree-oriented wedge-join bound as triangle listing: O(√E) work
     per edge, no adjacency-list buffering.
     """
-    return _support(canonical_edges(edges))
+    return _support(edges).select("src", "dst", "support")
 
 
 def ktruss(
@@ -124,7 +126,7 @@ def ktruss(
             raise RuntimeError(
                 f"k-truss did not converge within max_rounds={max_rounds}"
             )
-    out = _support(cur).localCheckpoint(eager=True)
+    out = _support(cur).select("src", "dst", "support")
     if prev is not None:
         prev.unpersist()
     return out

@@ -31,9 +31,10 @@ adjacent to several clusters attach to the MINIMUM cluster id (the
 original algorithm's answer depends on visit order; the min rule makes
 the output order-free).  Cluster ids are the min core vertex id.
 
-Scale shape: per-edge support via the degree-oriented wedge join
-(O(√E)-bounded work per edge), threshold filters, hash aggregates, two
-semi-joins, and one run of the proven small-star/large-star CC driver
+Scale shape: per-edge support and both endpoint degrees from one support
+pass (``ktruss._support``: the degree-oriented wedge join, O(√E)-bounded
+work per edge, no degree-table join), threshold filters, hash aggregates,
+two semi-joins, and one run of the proven small-star/large-star CC driver
 over the (much smaller) core-core ε-edge backbone.  No per-row Python,
 no windows over unbounded groups, no driver state beyond CC's O(log n)
 supersteps.
@@ -56,38 +57,23 @@ def structural_similarity(
 
     Returns ``(src, dst, support, sigma_e6)`` with ``src < dst``:
     ``sigma_e6 = floor(1e6·(support+2)/sqrt((deg_u+1)·(deg_v+1)) + 0.5)``.
-    ``_canon``: pre-checkpointed canonical edge table to reuse (internal —
-    :func:`scan_clusters` shares one canonicalization across similarity
-    and hub detection).
+    ``_canon``: a pinned canonical edge table read instead of ``edges``
+    (internal — :func:`scan_clusters` passes the one its hub detection
+    reads).
     """
-    canon = (
-        _canon
-        if _canon is not None
-        else canonical_edges(edges).localCheckpoint(eager=True)
-    )
-    deg = (
-        canon.select(F.col("src").alias("v"))
-        .unionByName(canon.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-    )
-    return (
-        _support(canon)
-        .join(deg.select(F.col("v").alias("src"), F.col("deg").alias("ds")), "src")
-        .join(deg.select(F.col("v").alias("dst"), F.col("deg").alias("dd")), "dst")
-        .select(
-            "src",
-            "dst",
-            "support",
-            F.floor(
-                (F.col("support") + F.lit(2))
-                * 1_000_000.0
-                / F.sqrt(((F.col("ds") + 1) * (F.col("dd") + 1)).cast("double"))
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("sigma_e6"),
+    sup = _support(_canon if _canon is not None else edges)
+    return sup.select(
+        "src",
+        "dst",
+        "support",
+        F.floor(
+            (F.col("support") + F.lit(2))
+            * 1_000_000.0
+            / F.sqrt(((F.col("deg_src") + 1) * (F.col("deg_dst") + 1)).cast("double"))
+            + F.lit(0.5)
         )
+        .cast("long")
+        .alias("sigma_e6"),
     )
 
 

@@ -11,9 +11,10 @@ semantics (an edge survives if EITHER endpoint ranks it) preserves the
 community structure that clustering/label-propagation algorithms need
 while dropping a large fraction of intra-hub noise edges.
 
-Scale shape: per-edge similarity reuses the degree-oriented wedge join
-(O(√E)-bounded per edge, via
-:func:`halvesting_geometric_spark.operators.ktruss.edge_support`); the
+Scale shape: per-edge support and both endpoint degrees come from one
+support pass (``ktruss._support``: the degree-oriented wedge join,
+O(√E)-bounded per edge, whose oriented table already carries the
+degrees), so no degree table is built or joined here; the
 per-vertex ranking is a ``row_number`` window partitioned by vertex —
 a sort-based, spillable shuffle on vertex id (hub partitions sort, they
 are never buffered into memory as arrays).  No all-pairs stage anywhere.
@@ -34,11 +35,9 @@ are documented as engine-internal.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from halvesting_geometric_spark.operators.graph import canonical_edges
 from halvesting_geometric_spark.operators.ktruss import _support
 
 
@@ -54,80 +53,52 @@ def local_jaccard_sparsify(edges: DataFrame, alpha: float = 0.5) -> DataFrame:
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    # one canonicalization shuffle, shared by the support join and the
-    # degree aggregate (edge_support would re-canonicalize internally).
-    # persist + count rather than localCheckpoint: an InMemoryRelation
-    # carries real size stats, so the downstream deg joins plan as
-    # broadcasts when deg is genuinely small (a checkpointed LogicalRDD
-    # reports unknown/huge size and pushed every join onto the shuffle
-    # path — the same triangle listing ran 3.7 s over checkpointed canon
-    # vs 0.6 s over the stats-bearing cached edge table in the bench)
-    canon = canonical_edges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    canon.count()
-    deg = (
-        canon.select(F.col("src").alias("v"))
-        .unionByName(canon.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-    )
-    sup = _support(canon)
-    sim = (
-        sup.join(deg.select(F.col("v").alias("src"), F.col("deg").alias("ds")), "src")
-        .join(deg.select(F.col("v").alias("dst"), F.col("deg").alias("dd")), "dst")
-        .select(
-            "src",
-            "dst",
-            # union = ds + dd - support: support counts common neighbors
-            # (excluding the endpoints); u is in N(v) and v in N(u), so the
-            # two endpoints contribute the non-shared +2 already inside
-            # ds + dd. Round-half-up e6 (den >= 2 always for an edge).
-            F.floor(
-                F.col("support")
-                * 1_000_000.0
-                / (F.col("ds") + F.col("dd") - F.col("support"))
-                + F.lit(0.5)
+    sup = _support(edges)
+    # union = deg_src + deg_dst - support: support counts common neighbors
+    # (excluding the endpoints); u is in N(v) and v in N(u), so the two
+    # endpoints contribute the non-shared +2 already inside the degree sum.
+    # Round-half-up e6 (den >= 2 always for an edge).
+    jaccard_e6 = F.floor(
+        F.col("support")
+        * 1_000_000.0
+        / (F.col("deg_src") + F.col("deg_dst") - F.col("support"))
+        + F.lit(0.5)
+    ).cast("long")
+    # each edge as its two incidences, each carrying its own vertex's degree
+    # for the quota
+    incid = sup.select(
+        "src",
+        "dst",
+        jaccard_e6.alias("jaccard_e6"),
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("src").alias("v"),
+                    F.col("dst").alias("other"),
+                    F.col("deg_src").alias("deg"),
+                ),
+                F.struct(
+                    F.col("dst").alias("v"),
+                    F.col("src").alias("other"),
+                    F.col("deg_dst").alias("deg"),
+                ),
             )
-            .cast("long")
-            .alias("jaccard_e6"),
-        )
-        # sim feeds BOTH incidence branches below: persist so the two deg
-        # joins run once, not once per branch (bounded by E rows x 3 cols)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    incid = sim.select(
-        F.col("src").alias("v"), F.col("dst").alias("other"), "src", "dst", "jaccard_e6"
-    ).unionByName(
-        sim.select(
-            F.col("dst").alias("v"),
-            F.col("src").alias("other"),
-            "src",
-            "dst",
-            "jaccard_e6",
-        )
-    )
+        ).alias("i"),
+    ).select("src", "dst", "jaccard_e6", "i.*")
     if alpha == 0.5:
         quota = F.ceil(F.sqrt(F.col("deg")))
     else:
         quota = F.ceil(F.pow(F.col("deg"), F.lit(float(alpha))))
-    ranked = (
-        incid.join(deg, "v")
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("v").orderBy(
-                    F.col("jaccard_e6").desc(), F.col("other").asc()
-                )
-            ),
-        )
-        .filter(F.col("rk") <= quota)
-    )
-    # materialize eagerly so the canon/sim caches can be released before
-    # returning (same contract as linkpred.neighborhood_scores)
-    out = (
+    ranked = incid.withColumn(
+        "rk",
+        F.row_number().over(
+            Window.partitionBy("v").orderBy(
+                F.col("jaccard_e6").desc(), F.col("other").asc()
+            )
+        ),
+    ).filter(F.col("rk") <= quota)
+    return (
         ranked.select("src", "dst", "jaccard_e6")
         .distinct()
         .localCheckpoint(eager=True)
     )
-    sim.unpersist()
-    canon.unpersist()
-    return out

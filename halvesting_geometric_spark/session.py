@@ -32,7 +32,15 @@ policy, the bench's ``query_cpu_s`` median went 142.7 → 81.8 on
 pairs); README's "Driver JVM policy" has each flag's own A/B and the
 steady-state guards. C1 and C2 give bit-identical doubles (JDK 17 floating
 point is strict, JEP 306), and plans and job counts do not depend on the
-JIT. Callers append to these options through ``extra_conf``'s
+JIT. ``-XX:ReservedCodeCacheSize=240m`` sizes the code cache for that JIT:
+a JVM that stops at C1 falls back to HotSpot's non-tiered 48 MB default,
+and one bench query nearly fills it. On ``transcripts`` (seed 42, one run
+each) the ``CodeCache`` pool peaked at 44.1 MB and fell back to 33.9 MB as the
+sweeper flushed compiled code that then had to be compiled again; total
+JIT time was 23.2 s. With 240 MB, HotSpot's own default when tiered
+compilation reaches C2, the peak was 46.4 MB, nothing was flushed and JIT
+time was 11.9 s. ``powerlaw`` peaks at 38-39 MB and never flushed.
+Callers append to these options through ``extra_conf``'s
 ``spark.driver.extraJavaOptions``; HotSpot takes the last occurrence of a
 flag, so ``-XX:TieredStopAtLevel=4`` brings C2 back, while G1 needs
 ``-XX:-UseParallelGC -XX:+UseG1GC`` (two collectors selected at once stop
@@ -60,6 +68,7 @@ from pyspark.sql import SparkSession
 
 _DRIVER_JAVA_OPTIONS = (
     "-Djava.net.preferIPv4Stack=true -XX:TieredStopAtLevel=1 -XX:+UseParallelGC"
+    " -XX:ReservedCodeCacheSize=240m"
 )
 
 # Fixed when the driver JVM starts; under spark-submit it already has.

@@ -6,7 +6,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from halvesting_geometric_spark.operators.ktruss import ktruss
+from halvesting_geometric_spark.operators.curvature import forman_curvature
+from halvesting_geometric_spark.operators.ktruss import edge_support, ktruss
+from halvesting_geometric_spark.operators.scan import structural_similarity
+from halvesting_geometric_spark.operators.sparsify import local_jaccard_sparsify
 
 
 def _python_ktruss(pairs, k, fixed_rounds=None):
@@ -71,3 +74,28 @@ def test_ktruss_known_structure(spark):
     assert (got["support"] == 2).all()
     with pytest.raises(ValueError, match="k must be"):
         ktruss(edges, k=1)
+
+
+SUPPORT_USERS = {
+    "local_jaccard_sparsify": local_jaccard_sparsify,
+    "forman_curvature": forman_curvature,
+    "structural_similarity": structural_similarity,
+    "edge_support": edge_support,
+    "ktruss": lambda edges: ktruss(edges, k=3),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SUPPORT_USERS))
+def test_support_users_leave_the_cache_as_they_found_it(spark, name):
+    """Every caller of the shared support pass releases the oriented table
+    it persists: the session's cache holds the same entries after the call
+    and after its result is read as before."""
+    def cache_entries():
+        return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+    edges, _ = _graph(spark, seed=47)
+    before = cache_entries()
+    out = SUPPORT_USERS[name](edges)
+    assert cache_entries() == before
+    assert out.count() > 0
+    assert cache_entries() == before

@@ -155,6 +155,7 @@ def test_caller_java_options_append_to_the_driver_policy():
         "-Djava.net.preferIPv4Stack=true",
         "-XX:TieredStopAtLevel=1",
         "-XX:+UseParallelGC",
+        "-XX:ReservedCodeCacheSize=240m",
     ]
     assert _driver_java_options("") == base
     merged = _driver_java_options("-XX:TieredStopAtLevel=4 -Dx=1")
@@ -199,7 +200,8 @@ def test_driver_jvm_gets_the_policy_then_caller_options(spark):
     jvm = spark._jvm
     args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
                 .getInputArguments())
-    expected = ["-XX:TieredStopAtLevel=1", "-XX:+UseParallelGC"]
+    expected = ["-XX:TieredStopAtLevel=1", "-XX:+UseParallelGC",
+                "-XX:ReservedCodeCacheSize=240m"]
     expected += LONG_LIVED_JVM_OPTIONS.split()
     positions = [args.index(flag) for flag in expected]
     assert positions == sorted(positions)
@@ -207,6 +209,8 @@ def test_driver_jvm_gets_the_policy_then_caller_options(spark):
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
     in_force = {name: hotspot.getVMOption(name).getValue()
-                for name in ("TieredStopAtLevel", "UseParallelGC", "UseG1GC")}
+                for name in ("TieredStopAtLevel", "UseParallelGC", "UseG1GC",
+                             "ReservedCodeCacheSize")}
     assert in_force == {"TieredStopAtLevel": "4", "UseParallelGC": "false",
-                        "UseG1GC": "true"}
+                        "UseG1GC": "true",
+                        "ReservedCodeCacheSize": str(240 * 1024 * 1024)}

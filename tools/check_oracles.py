@@ -10,11 +10,12 @@ order-insensitive multiset of values. Usage::
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "

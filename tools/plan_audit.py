@@ -14,8 +14,9 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 # Sanctioned Arrow-batched kernels expected in the PRINTED plan of a gate
 # query (mapInPandas by design, not an accident). Every queries() entry NOT
