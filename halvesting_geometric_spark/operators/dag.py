@@ -36,6 +36,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from halvesting_geometric_spark.operators.graph import _id_frame
+
 _NEG_INF = float("-inf")
 
 
@@ -165,12 +167,8 @@ def dag_longest_paths(
             "vertex_id",
             "left_anti",
         )
-    elif isinstance(sources, (list, tuple)):
-        seed = spark.createDataFrame(
-            [(int(s),) for s in sources], "vertex_id long"
-        )
     else:
-        seed = sources
+        seed = _id_frame(spark, sources)
     dist = (
         seed.select("vertex_id")
         .distinct()

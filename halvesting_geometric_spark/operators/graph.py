@@ -11,11 +11,29 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from halvesting_geometric_spark.operators.extract import extract_conv_edges
 from halvesting_geometric_spark.operators.ids import build_vertices, edges_to_ids
+
+
+def _id_frame(
+    spark: SparkSession,
+    ids: DataFrame | list | tuple,
+    cols: tuple[str, ...] = ("vertex_id",),
+    dtype: str = "long",
+) -> DataFrame:
+    """A seed, source or start set as a DataFrame: a DataFrame passes
+    through; a list or tuple becomes one row per id, the id (as ``dtype``,
+    "long" or "string") in every column of ``cols``."""
+    if not isinstance(ids, (list, tuple)):
+        return ids
+    conv = int if dtype == "long" else str
+    return spark.createDataFrame(
+        [(conv(i),) * len(cols) for i in ids],
+        ", ".join(f"{c} {dtype}" for c in cols),
+    )
 
 
 def out_degrees(edges: DataFrame) -> DataFrame:

@@ -24,6 +24,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from halvesting_geometric_spark.operators.graph import _id_frame
+
 
 def linear_threshold(
     edges: DataFrame,
@@ -42,10 +44,7 @@ def linear_threshold(
     if max_rounds < 0:
         raise ValueError(f"max_rounds must be >= 0, got {max_rounds}")
     spark = edges.sparkSession
-    if isinstance(seeds, (list, tuple)):
-        seeds = spark.createDataFrame(
-            [(int(s),) for s in seeds], "vertex_id long"
-        )
+    seeds = _id_frame(spark, seeds)
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     topo = (
         edges.select("src", "dst")

@@ -49,8 +49,9 @@ def _compact_item_keys(
 ) -> tuple[DataFrame, str | None]:
     """Cast integral item keys to int32 when every value fits — half the
     key bytes through the loop-invariant pair table and the per-iteration
-    state joins (the centrality._compact_topology lesson: id compaction
-    moved the 20M-edge PageRank superstep from E(1→4)=0.70 to 0.95).
+    state joins (the lesson of ``centrality._topology(compact=True)``: id
+    compaction moved the 20M-edge PageRank superstep from E(1→4)=0.70 to
+    0.95).
     Returns ``(df, original_dtype)``; dtype is None when no compaction
     applied (non-integral items, or values outside int32). Callers cast
     the output item column back so the public schema is unchanged."""

@@ -51,6 +51,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from halvesting_geometric_spark.operators.graph import _id_frame
+
 __all__ = ["simrank", "simrank_mc"]
 
 
@@ -189,10 +191,7 @@ def simrank_mc(
     from halvesting_geometric_spark.operators.walks import random_walks
 
     spark = edges.sparkSession
-    if isinstance(query_vertices, (list, tuple)):
-        query_vertices = spark.createDataFrame(
-            [(int(v),) for v in query_vertices], "vertex_id long"
-        )
+    query_vertices = _id_frame(spark, query_vertices)
     rev = edges.where(F.col("src") != F.col("dst")).select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
     )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from halvesting_geometric_spark.functions import extract_refs
+from halvesting_geometric_spark.operators.graph import _id_frame
 
 
 def edge_events(transcripts: DataFrame) -> DataFrame:
@@ -275,10 +276,7 @@ def temporal_reachability(
     if time_buckets is not None and time_buckets < 1:
         raise ValueError(f"time_buckets must be >= 1, got {time_buckets}")
     spark = tedges.sparkSession
-    if isinstance(sources, (list, tuple)):
-        sources = spark.createDataFrame(
-            [(int(s),) for s in sources], "vertex_id long"
-        )
+    sources = _id_frame(spark, sources)
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     inf = F.lit(2**62).cast("long")
     topo = (

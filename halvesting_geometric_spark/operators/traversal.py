@@ -1,12 +1,20 @@
-"""Multi-source BFS: shortest hop distance from a seed set (engine-new).
+"""Frontier BFS, Bellman-Ford distances and absorbing walks (engine-new).
 
-Frontier-expansion supersteps on the same substrate as the other iterative
-drivers: the cached pure-topology edge table never reshuffles; each level is
-one gather join (frontier → neighbors) + one anti join (drop already-visited)
-— first discovery is the shortest distance, so no min-recomputation pass is
-needed. Lineage truncates per level via lazy localCheckpoint; the frontier
-(not the full visited set) drives the join, so per-level work is proportional
-to the frontier's edge boundary.
+Hop distances: :func:`bfs_levels` and :func:`landmark_bfs` run one frontier
+loop, :func:`_bfs`. The cached pure-topology edge table never reshuffles;
+each level is one gather join (frontier → neighbors) + one anti join (drop
+already-visited) — first discovery is the shortest distance, so no
+min-recomputation pass is needed. Lineage truncates per level via lazy
+localCheckpoint; the frontier (not the full visited set) drives the join, so
+per-level work is proportional to the frontier's edge boundary.
+
+Weighted distances: :func:`sssp` and :func:`landmark_sssp` run one
+Bellman-Ford relaxation, :func:`_bellman_ford`, through
+``plans/superstep.py``'s driver.
+
+Both loops key their state on ``vertex_id`` plus a key tuple: ``()``, or
+``("lm",)`` for the landmark twins, whose k sources expand together as
+(vertex, landmark) rows.
 """
 
 from __future__ import annotations
@@ -15,10 +23,87 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from halvesting_geometric_spark.operators.centrality import _gather
+from halvesting_geometric_spark.operators.graph import _id_frame, undirected
 from halvesting_geometric_spark.plans.superstep import (
     resume_point,
     run_supersteps,
 )
+
+
+def _seeds(
+    sources: DataFrame | list[int], vertices: DataFrame, keys: tuple[str, ...]
+) -> DataFrame:
+    """(vertex_id, *keys): the distinct sources that are vertices, so no
+    state row ever leaves the graph; each key column holds the source
+    itself."""
+    return (
+        _id_frame(vertices.sparkSession, sources)
+        .select("vertex_id")
+        .distinct()
+        .join(vertices.select("vertex_id"), "vertex_id", "left_semi")
+        .select("vertex_id", *[F.col("vertex_id").alias(k) for k in keys])
+    )
+
+
+def _bfs(
+    edges: DataFrame,
+    vertices: DataFrame,
+    sources: DataFrame | list[int],
+    max_depth: int,
+    directed: bool,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """(vertex_id, *keys, dist) for every vertex within ``max_depth`` hops
+    of a source, ``dist`` counted from the nearest source that agrees on
+    ``keys``."""
+    if max_depth < 0:
+        raise ValueError(f"max_depth must be >= 0, got {max_depth}")
+    n_shuffle = int(
+        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    )
+    topo = (
+        edges.select("src", "dst")
+        if directed
+        else undirected(edges, dedupe=False)
+    )
+    topo = (
+        topo.repartition(n_shuffle, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    topo.count()
+
+    cols = ["vertex_id", *keys]
+    visited = _seeds(sources, vertices, keys).select(
+        *cols, F.lit(0).alias("dist")
+    )
+    frontier = visited
+    prev_caches: list[DataFrame] = []
+    for depth in range(1, max_depth + 1):
+        nxt = (
+            topo.join(
+                frontier.select(F.col("vertex_id").alias("src"), *keys), "src"
+            )
+            .select(F.col("dst").alias("vertex_id"), *keys)
+            .distinct()
+            .join(visited.select(*cols), cols, "left_anti")
+            .select(*cols, F.lit(depth).alias("dist"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        n_new = nxt.count()
+        if n_new == 0:
+            nxt.unpersist()
+            break
+        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
+        frontier = nxt
+        for p in prev_caches:
+            p.unpersist()
+        prev_caches = [nxt]
+    out = visited.select(*cols, F.col("dist").cast("long").alias("dist"))
+    out = out.localCheckpoint(eager=True)
+    for p in prev_caches:
+        p.unpersist()
+    topo.unpersist()
+    return out
 
 
 def bfs_levels(
@@ -36,59 +121,7 @@ def bfs_levels(
     are then correct for every emitted row — deeper vertices are just absent),
     which is the externally-verifiable fixed-depth mode the gate uses.
     """
-    if max_depth < 0:
-        raise ValueError(f"max_depth must be >= 0, got {max_depth}")
-    spark = edges.sparkSession
-    if isinstance(sources, (list, tuple)):
-        sources = spark.createDataFrame(
-            [(int(s),) for s in sources], "vertex_id long"
-        )
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    topo = edges.select("src", "dst")
-    if not directed:
-        topo = topo.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    topo = (
-        topo.repartition(n_shuffle, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    topo.count()
-
-    # restrict seeds to real vertices so dist rows never leave the graph
-    visited = (
-        sources.select("vertex_id")
-        .distinct()
-        .join(vertices.select("vertex_id"), "vertex_id", "left_semi")
-        .select("vertex_id", F.lit(0).alias("dist"))
-    )
-    frontier = visited
-    prev_caches: list[DataFrame] = []
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            topo.join(
-                frontier.select(F.col("vertex_id").alias("src")), "src", "left_semi"
-            )
-            .select(F.col("dst").alias("vertex_id"))
-            .distinct()
-            .join(visited.select("vertex_id"), "vertex_id", "left_anti")
-            .select("vertex_id", F.lit(depth).alias("dist"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        n_new = nxt.count()
-        if n_new == 0:
-            nxt.unpersist()
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-        for p in prev_caches:
-            p.unpersist()
-        prev_caches = [nxt]
-    out = visited.select("vertex_id", F.col("dist").cast("long").alias("dist"))
-    out = out.localCheckpoint(eager=True)
-    for p in prev_caches:
-        p.unpersist()
-    topo.unpersist()
-    return out
+    return _bfs(edges, vertices, sources, max_depth, directed)
 
 
 def landmark_bfs(
@@ -106,65 +139,94 @@ def landmark_bfs(
     public paper): k seeds expand together in one frontier whose rows are
     (vertex, landmark) pairs, so the whole precompute is ``max_depth``
     supersteps regardless of k, on the same cached-topology /
-    frontier-anti-join substrate as :func:`bfs_levels`. State is at most
+    frontier-anti-join loop as :func:`bfs_levels`. State is at most
     V×k rows — the explicit, budgetable cost of the oracle.
     """
-    if max_depth < 0:
-        raise ValueError(f"max_depth must be >= 0, got {max_depth}")
-    spark = edges.sparkSession
-    if isinstance(landmarks, (list, tuple)):
-        landmarks = spark.createDataFrame(
-            [(int(s),) for s in landmarks], "vertex_id long"
-        )
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    topo = edges.select("src", "dst")
+    return _bfs(edges, vertices, landmarks, max_depth, directed, ("lm",))
+
+
+def _weighted_topology(
+    edges: DataFrame, weight_col: str | None, directed: bool
+) -> DataFrame:
+    """The cached (src, dst, w) topology hash-partitioned on ``src``, both
+    directions unless ``directed``; ``weight_col=None`` means unit weights.
+    Raises on a negative weight."""
+    n_shuffle = int(
+        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    )
+    w = (
+        F.col(weight_col).cast("double")
+        if weight_col is not None
+        else F.lit(1.0)
+    )
+    topo = edges.select("src", "dst", w.alias("w"))
     if not directed:
         topo = topo.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    topo = (
-        topo.repartition(n_shuffle, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    topo.count()
-
-    visited = (
-        landmarks.select("vertex_id")
-        .distinct()
-        .join(vertices.select("vertex_id"), "vertex_id", "left_semi")
-        .select(
-            "vertex_id", F.col("vertex_id").alias("lm"), F.lit(0).alias("dist")
-        )
-    )
-    frontier = visited
-    prev_caches: list[DataFrame] = []
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            topo.join(
-                frontier.select(F.col("vertex_id").alias("src"), "lm"), "src"
+            edges.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst"), w.alias("w")
             )
-            .select(F.col("dst").alias("vertex_id"), "lm")
-            .distinct()
-            .join(visited.select("vertex_id", "lm"), ["vertex_id", "lm"], "left_anti")
-            .select("vertex_id", "lm", F.lit(depth).alias("dist"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        n_new = nxt.count()
-        if n_new == 0:
-            nxt.unpersist()
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-        for p in prev_caches:
-            p.unpersist()
-        prev_caches = [nxt]
-    out = visited.select(
-        "vertex_id", "lm", F.col("dist").cast("long").alias("dist")
+    topo = topo.repartition(n_shuffle, "src").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    out = out.localCheckpoint(eager=True)
-    for p in prev_caches:
-        p.unpersist()
-    topo.unpersist()
-    return out
+    neg = topo.agg(F.min("w").alias("m")).first()["m"]
+    if neg is not None and neg < 0:
+        topo.unpersist()
+        raise ValueError(f"negative edge weight {neg}; requires w >= 0")
+    return topo
+
+
+def _bellman_ford(
+    topo: DataFrame,
+    dist: DataFrame,
+    keys: tuple[str, ...],
+    steps: int,
+    start: int = 0,
+    batch: int = 1,
+    checkpoint=None,
+) -> DataFrame:
+    """Relax every edge of ``topo`` from the state (vertex_id, *keys, dist)
+    in supersteps ``start`` .. ``steps - 1``, ``batch`` to a Spark job,
+    stopping early at a round that improves nothing (``run_supersteps``'
+    rules). Releases ``topo``."""
+    cols = ["vertex_id", *keys]
+
+    def _relax(state_df: DataFrame, _carried: dict | None) -> DataFrame:
+        """One lazy relaxation: (vertex_id, *keys, dist, _improved)."""
+        relaxed = (
+            topo.join(
+                state_df.select(F.col("vertex_id").alias("src"), *keys, "dist"),
+                "src",
+            )
+            .groupBy(F.col("dst").alias("vertex_id"), *keys)
+            .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
+        )
+        return state_df.join(relaxed, cols, "full_outer").select(
+            *cols,
+            F.least(
+                F.coalesce("dist", F.lit(float("inf"))),
+                F.coalesce("cand", F.lit(float("inf"))),
+            ).alias("dist"),
+            (
+                F.col("dist").isNull()
+                | (F.coalesce("cand", F.lit(float("inf"))) < F.col("dist"))
+            ).alias("_improved"),
+        )
+
+    try:
+        return run_supersteps(
+            dist,
+            _relax,
+            lambda pair: {"n_improved": pair.filter(F.col("_improved")).count()},
+            lambda state: state.localCheckpoint(eager=True),
+            done=lambda obs, _: obs["n_improved"] == 0,
+            steps=steps,
+            start=start,
+            batch=batch,
+            checkpoint=checkpoint,
+        ).result
+    finally:
+        topo.unpersist()
 
 
 def landmark_sssp(
@@ -183,91 +245,22 @@ def landmark_sssp(
     All k landmarks relax together: one gather join + min-aggregate +
     full-outer merge per superstep regardless of k (``fixed_iters``
     supersteps total — after them every distance using ≤ that many hops
-    is exact, the same externally-verifiable contract as :func:`sssp`).
-    State is at most V×k rows; per-round lineage truncates via lazy
-    localCheckpoint. Weights must be non-negative; ``None`` = unit
-    weights (then distances equal :func:`landmark_bfs` hop counts).
-    Returns (vertex_id, lm, dist double) for reached pairs.
+    is exact, the same externally-verifiable contract as :func:`sssp`,
+    whose relaxation and superstep driver it runs). State is at most V×k
+    rows. Weights must be non-negative; ``None`` = unit weights (then
+    distances equal :func:`landmark_bfs` hop counts). Returns
+    (vertex_id, lm, dist double) for reached pairs; empty when no landmark
+    is a vertex.
     """
     if fixed_iters < 0:
         raise ValueError(f"fixed_iters must be >= 0, got {fixed_iters}")
-    spark = edges.sparkSession
-    if isinstance(landmarks, (list, tuple)):
-        landmarks = spark.createDataFrame(
-            [(int(s),) for s in landmarks], "vertex_id long"
-        )
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    w = (
-        F.col(weight_col).cast("double")
-        if weight_col is not None
-        else F.lit(1.0)
-    )
-    topo = edges.select("src", "dst", w.alias("w"))
-    if not directed:
-        topo = topo.unionByName(
-            edges.select(
-                F.col("dst").alias("src"),
-                F.col("src").alias("dst"),
-                w.alias("w"),
-            )
-        )
-    topo = topo.repartition(n_shuffle, "src").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    neg = topo.agg(F.min("w").alias("m")).first()["m"]
-    if neg is not None and neg < 0:
-        raise ValueError(f"negative edge weight {neg}; requires w >= 0")
-
+    topo = _weighted_topology(edges, weight_col, directed)
     dist = (
-        landmarks.select("vertex_id")
-        .distinct()
-        .join(vertices.select("vertex_id"), "vertex_id", "left_semi")
-        .select(
-            "vertex_id", F.col("vertex_id").alias("lm"),
-            F.lit(0.0).alias("dist"),
-        )
+        _seeds(landmarks, vertices, ("lm",))
+        .withColumn("dist", F.lit(0.0))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    prev = dist
-    for _ in range(fixed_iters):
-        cand = (
-            topo.join(
-                dist.select(F.col("vertex_id").alias("src"), "lm", "dist"),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("vertex_id"), "lm")
-            .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
-        )
-        merged = (
-            dist.join(cand, ["vertex_id", "lm"], "full_outer")
-            .select(
-                "vertex_id",
-                "lm",
-                F.when(
-                    F.col("dist").isNull(), F.col("cand")
-                )
-                .when(F.col("cand").isNull(), F.col("dist"))
-                .otherwise(F.least("dist", "cand"))
-                .alias("dist"),
-                (
-                    F.col("dist").isNull()
-                    | (F.col("cand").isNotNull() & (F.col("cand") < F.col("dist")))
-                ).cast("long").alias("_imp"),
-            )
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        improved = merged.agg(F.sum("_imp")).first()[0] or 0
-        nxt = merged.drop("_imp")
-        prev.unpersist()
-        prev = merged
-        dist = nxt
-        if improved == 0:
-            break
-    out = dist.localCheckpoint(eager=True)
-    prev.unpersist()
-    topo.unpersist()
-    return out
+    return _bellman_ford(topo, dist, ("lm",), fixed_iters)
 
 
 def landmark_distance_estimates(
@@ -314,7 +307,7 @@ def sssp(
 
     Each superstep relaxes every edge once: dist'(v) = min(dist(v),
     min_{u→v}(dist(u) + w(u, v))) as one gather join + min-aggregate + one
-    full-outer pair — the same one-job-per-iteration shape as the PageRank
+    full-outer pair — the same one-action-per-iteration shape as the PageRank
     driver, lineage truncated via lazy localCheckpoint. After k supersteps
     every distance using ≤ k hops is exact, so ``fixed_iters`` bounds both
     the work and the externally-verifiable semantics (the gate's DuckDB twin
@@ -331,81 +324,24 @@ def sssp(
     Returns (vertex_id, dist) for every vertex reached within
     ``fixed_iters`` hops; unreached vertices are absent.
     """
-    spark = edges.sparkSession
-    if isinstance(sources, (list, tuple)):
-        sources = spark.createDataFrame(
-            [(int(s),) for s in sources], "vertex_id long"
-        )
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    w = (
-        F.col(weight_col).cast("double")
-        if weight_col is not None
-        else F.lit(1.0)
-    )
-    topo = edges.select("src", "dst", w.alias("w"))
-    if not directed:
-        topo = topo.unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), w.alias("w")
-            )
-        )
-    topo = topo.repartition(n_shuffle, "src").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    neg = topo.agg(F.min("w").alias("m")).first()["m"]
-    if neg is not None and neg < 0:
-        raise ValueError(f"negative edge weight {neg}; sssp requires w >= 0")
-
+    topo = _weighted_topology(edges, weight_col, directed)
     start, dist = resume_point(checkpoint, resume)
     if dist is None:
-        dist = (
-            sources.select("vertex_id")
-            .distinct()
-            .join(vertices.select("vertex_id"), "vertex_id", "left_semi")
-            .select("vertex_id", F.lit(0.0).alias("dist"))
-        )
+        dist = _seeds(sources, vertices, ()).withColumn("dist", F.lit(0.0))
     dist = dist.persist(StorageLevel.MEMORY_AND_DISK)
     if dist.count() == 0:
-        raise ValueError("source set is empty (or disjoint from vertices)")
-    def _relax(state_df: DataFrame, _carried: dict | None) -> DataFrame:
-        """One lazy relaxation: (vertex_id, dist, _improved)."""
-        relaxed = (
-            topo.join(
-                state_df.select(F.col("vertex_id").alias("src"), "dist"), "src"
-            )
-            .groupBy("dst")
-            .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
-        )
-        return state_df.join(
-            relaxed.select(F.col("dst").alias("vertex_id"), "cand"),
-            "vertex_id",
-            "full_outer",
-        ).select(
-            "vertex_id",
-            F.least(
-                F.coalesce("dist", F.lit(float("inf"))),
-                F.coalesce("cand", F.lit(float("inf"))),
-            ).alias("dist"),
-            (
-                F.col("dist").isNull()
-                | (F.coalesce("cand", F.lit(float("inf"))) < F.col("dist"))
-            ).alias("_improved"),
-        )
-
-    try:
-        return run_supersteps(
-            dist,
-            _relax,
-            lambda pair: {"n_improved": pair.filter(F.col("_improved")).count()},
-            lambda state: state.localCheckpoint(eager=True),
-            done=lambda obs, _: obs["n_improved"] == 0,
-            steps=fixed_iters,
-            start=start,
-            batch=sync_every,
-            checkpoint=checkpoint,
-        ).result
-    finally:
+        dist.unpersist()
         topo.unpersist()
+        raise ValueError("source set is empty (or disjoint from vertices)")
+    return _bellman_ford(
+        topo,
+        dist,
+        (),
+        fixed_iters,
+        start=start,
+        batch=sync_every,
+        checkpoint=checkpoint,
+    )
 
 
 def double_sweep_diameter(
@@ -429,9 +365,7 @@ def double_sweep_diameter(
     semantics the gate's DuckDB twin unrolls.  Returns ONE row
     ``(start, far_vertex, diameter_lb)``.  Raises on an empty vertex set.
     """
-    und = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).filter(F.col("src") != F.col("dst")).dropDuplicates(["src", "dst"])
+    und = undirected(edges).filter(F.col("src") != F.col("dst"))
     deg = und.groupBy(F.col("src").alias("vertex_id")).agg(
         F.count("*").alias("deg")
     )
@@ -480,7 +414,7 @@ def ego_subgraph(
     members — two left-semi joins against the (small, frontier-bounded)
     member set, which Catalyst broadcasts when it fits. This is the subgraph
     a GNN mini-batch or a debugging session extracts around entities of
-    interest; reachability reuses the superstep BFS driver (one job per hop,
+    interest; reachability reuses the superstep BFS driver (one action per hop,
     lineage-truncated).
     """
     members = bfs_levels(
@@ -512,20 +446,14 @@ def hitting_probability(
     h_0 = [v ∈ T] — the same gather-scatter superstep as PageRank with the
     target rows pinned, so the per-iteration plan is one join on the
     edge destination + one groupBy on the source (shuffles on vertex id,
-    AQE-planned), with per-round lineage truncation. Returns
-    (vertex_id, hit_prob: double).
+    AQE-planned). Each state is a lazy localCheckpoint, so the recurrence
+    is one action at the end. Returns (vertex_id, hit_prob: double).
     """
     if steps < 0:
         raise ValueError(f"steps must be >= 0, got {steps}")
-    spark = edges.sparkSession
-    if isinstance(targets, (list, tuple)):
-        targets = spark.createDataFrame(
-            [(int(t),) for t in targets], "vertex_id long"
-        )
     tset = (
-        targets.select("vertex_id")
-        .distinct()
-        .join(vertices.select("vertex_id"), "vertex_id", "left_semi")
+        _seeds(targets, vertices, ())
+        .withColumn("_t", F.lit(1))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     outdeg = edges.groupBy("src").agg(F.count("*").alias("od"))
@@ -533,44 +461,24 @@ def hitting_probability(
         StorageLevel.MEMORY_AND_DISK
     )
     topo.count()
-    # h_0: exactly the target indicator (join-based; no driver-side id list)
-    h = (
-        vertices.select("vertex_id")
-        .join(tset.withColumn("_t", F.lit(1)), "vertex_id", "left")
-        .select(
+
+    def pinned(h: DataFrame) -> DataFrame:
+        """Targets at 1.0, every other vertex at ``raw``."""
+        return h.join(tset, "vertex_id", "left").select(
             "vertex_id",
             F.when(F.col("_t").isNotNull(), F.lit(1.0))
-            .otherwise(F.lit(0.0))
+            .otherwise(F.col("raw"))
             .alias("hit_prob"),
         )
-    )
-    prev_cp = None
+
+    verts = vertices.select("vertex_id")
+    # h_0: exactly the target indicator (join-based; no driver-side id list)
+    h = pinned(verts.withColumn("raw", F.lit(0.0)))
     for _ in range(steps):
-        gathered = (
-            topo.join(
-                h.select(F.col("vertex_id").alias("dst"), "hit_prob"), "dst"
-            )
-            .groupBy("src")
-            .agg(F.sum(F.col("hit_prob") / F.col("od")).alias("_g"))
-        )
-        nxt = (
-            vertices.select("vertex_id")
-            .join(gathered.select(F.col("src").alias("vertex_id"), "_g"),
-                  "vertex_id", "left")
-            .join(tset.withColumn("_t", F.lit(1)), "vertex_id", "left")
-            .select(
-                "vertex_id",
-                F.when(F.col("_t").isNotNull(), F.lit(1.0))
-                .otherwise(F.coalesce(F.col("_g"), F.lit(0.0)))
-                .alias("hit_prob"),
-            )
-        )
-        h = nxt.localCheckpoint(eager=True)
-        if prev_cp is not None:
-            prev_cp.unpersist()
-        prev_cp = h
-    out = h.select("vertex_id", "hit_prob")
-    out = out.localCheckpoint(eager=True)
+        h = pinned(
+            _gather(topo, h, F.col("hit_prob") / F.col("od"), verts, "dst", "src")
+        ).localCheckpoint(eager=False)
+    out = h.localCheckpoint(eager=True)
     topo.unpersist()
     tset.unpersist()
     return out

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from halvesting_geometric_spark.operators.graph import _id_frame
 from halvesting_geometric_spark.operators.hetero import HeteroGraph
 from halvesting_geometric_spark.operators.sampling import hash64
 
@@ -46,11 +47,7 @@ def random_walks(
     """
     if walk_length < 0:
         raise ValueError(f"walk_length must be >= 0, got {walk_length}")
-    spark = edges.sparkSession
-    if isinstance(starts, (list, tuple)):
-        starts = spark.createDataFrame(
-            [(int(v), int(v)) for v in starts], "walker_id long, vertex_id long"
-        )
+    starts = _id_frame(edges.sparkSession, starts, ("walker_id", "vertex_id"))
     adj = (
         edges.select("src", "dst")
         .distinct()
@@ -128,12 +125,9 @@ def metapath_walks(
                 f"metapath breaks: relation {k1[1]!r} ends at {k1[2]!r} but "
                 f"{k2[1]!r} starts at {k2[0]!r}"
             )
-    spark = hg.edges[keys[0]].sparkSession
-    if isinstance(starts, (list, tuple)):
-        starts = spark.createDataFrame(
-            [(str(v), str(v)) for v in starts],
-            "walker_id string, vertex_id string",
-        )
+    starts = _id_frame(
+        hg.edges[keys[0]].sparkSession, starts, ("walker_id", "vertex_id"), "string"
+    )
     cur = starts.select(
         F.col("walker_id").cast("string").alias("walker_id"),
         F.col("vertex_id").cast("string").alias("vertex_id"),
@@ -227,11 +221,7 @@ def node2vec_walks(
         raise ValueError(f"walk_length must be >= 0, got {walk_length}")
     if p <= 0 or q <= 0:
         raise ValueError(f"p and q must be > 0, got p={p} q={q}")
-    spark = edges.sparkSession
-    if isinstance(starts, (list, tuple)):
-        starts = spark.createDataFrame(
-            [(int(v), int(v)) for v in starts], "walker_id long, vertex_id long"
-        )
+    starts = _id_frame(edges.sparkSession, starts, ("walker_id", "vertex_id"))
     m = 1 << 20  # dyadic hash resolution: τ has ≤20 mantissa bits
     nbr = edges.select("src", "dst").distinct().persist(
         StorageLevel.MEMORY_AND_DISK

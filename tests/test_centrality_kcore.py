@@ -12,10 +12,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from halvesting_geometric_spark.operators.centrality import (
+    eigenvector_centrality,
     hits,
+    katz_centrality,
     personalized_pagerank,
+    salsa,
 )
 from halvesting_geometric_spark.operators.kcore import kcore_members
+from halvesting_geometric_spark.operators.traversal import (
+    bfs_levels,
+    hitting_probability,
+    landmark_bfs,
+    landmark_sssp,
+    sssp,
+)
 
 
 def _random_graph(spark, n=40, m=160, seed=11):
@@ -362,3 +372,50 @@ def test_katz_centrality_matches_numpy(spark):
     for v in range(n):
         if indeg[v] == 0:
             assert got[v] == beta
+
+
+@pytest.mark.parametrize("op", [hits, salsa, eigenvector_centrality])
+def test_normalized_power_iterations_return_pinned_results(spark, op):
+    """Reading the result again runs no join or norm aggregate: its
+    executed plan is a scan of the checkpointed RDD, with no Exchange."""
+    edges, verts, _, _ = _random_graph(spark)
+    out = op(edges, verts, fixed_iters=2)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan
+    assert "Exchange" not in plan
+
+
+PORTED = {
+    "personalized_pagerank": lambda e, v: personalized_pagerank(
+        e, v, [0, 1], fixed_iters=2
+    ),
+    "hits": lambda e, v: hits(e, v, fixed_iters=2),
+    "salsa": lambda e, v: salsa(e, v, fixed_iters=2),
+    "eigenvector_centrality": lambda e, v: eigenvector_centrality(
+        e, v, fixed_iters=2
+    ),
+    "katz_centrality": lambda e, v: katz_centrality(e, v, fixed_iters=2),
+    "bfs_levels": lambda e, v: bfs_levels(e, v, [0, 1], max_depth=3),
+    "landmark_bfs": lambda e, v: landmark_bfs(e, v, [0, 1], max_depth=3),
+    "sssp": lambda e, v: sssp(e, v, [0, 1], fixed_iters=3),
+    "landmark_sssp": lambda e, v: landmark_sssp(e, v, [0, 1], fixed_iters=3),
+    "hitting_probability": lambda e, v: hitting_probability(e, v, [0, 1], 3),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PORTED))
+def test_gather_and_traversal_loops_leave_the_cache_as_they_found_it(
+    spark, name
+):
+    """Every operator on the shared gather step or traversal loops releases
+    what it persists: the session's cache holds the same entries after the
+    call and after its result is read as before."""
+    def cache_entries():
+        return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+    edges, verts, _, _ = _random_graph(spark)
+    before = cache_entries()
+    out = PORTED[name](edges, verts)
+    assert cache_entries() == before
+    assert out.count() > 0
+    assert cache_entries() == before
